@@ -1520,15 +1520,13 @@ def jaccard_prefix_filter_pairs(
         .localCheckpoint(eager=True)
         .withColumn("n", F.size("_set"))
     )
-    # counts deliberately stay the explode-based aggregate inside the
-    # candidate stage: two cheaper-looking alternatives were MEASURED
-    # and rejected this round — (a) reading sizes off the checkpointed
-    # sets relation and (b) a narrow scan projection both perturb the
-    # prefix subtree's size estimates (a LogicalRDD carries no stats; a
-    # HOF-filtered scan estimates at full size), flipping the
-    # statically-planned broadcast candidate join into a sort-merge
-    # join with two extra exchanges.  The aggregate's estimate keeps
-    # the measured-faster plan.
+    # the candidate stage derives its own per-doc counts from its
+    # shingle relation (``count(*) over (partition by _id_)`` on the
+    # rank window, see jaccard_prefix_candidate_pairs), not from the
+    # checkpointed sets above: a LogicalRDD carries no size statistics,
+    # so reading sizes off it (or off a narrow HOF-filtered scan, which
+    # estimates at full size) flipped the statically-planned broadcast
+    # candidate join into a sort-merge join with two extra exchanges.
     cand = jaccard_prefix_candidate_pairs(
         df, id_col, text_col, threshold, k, shingle_rel=sh
     )

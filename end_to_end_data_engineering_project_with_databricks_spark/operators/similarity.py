@@ -527,63 +527,63 @@ def lloyd_kmeans_fixed(
     therefore independent of partitioning AND replayable in ANSI SQL, so
     the trained codebook gets a full DuckDB oracle, not a rows-only row.
 
-    Execution shape is the standard distributed Lloyd loop (what
-    pyspark.ml KMeans itself does): the fit runs on a bounded
-    deterministic sample (``id < sample_bound`` — pushed to the scan),
-    each iteration scores sample x broadcast-centroids and reduces
-    per-cell integer sums map-side; only the k x dim centroid state
-    (16 x 64 longs here) ever reaches the driver, once, after the last
-    iteration — same bounded-collect class as the PQ codebook
-    (``_pq_codebook_sql``).  Empty cells keep their previous centroid.
+    Execution shape: Spark runs two bounded reads, both quantized in
+    Spark — the ``n_cells`` lowest-id seeds (``orderBy(id).limit``, i.e.
+    TakeOrderedAndProject) and the ``id < sample_bound`` sample (pushed
+    to the scan) — one bounded collect of ``sample_bound x dim`` longs.
+    The ``iters`` rounds run on the driver in NumPy int64, distances in
+    row chunks (O(sample x cells) memory); ``argmin`` keeps the first
+    minimum over id-sorted seeds; empty cells keep their centroid.
+
+    Degenerate inputs: an empty corpus, ``sample_bound=0`` (seeds come
+    back unchanged), ``n_cells`` above the row count and ``iters=0``
+    return a well-formed frame.  NULL vectors or elements among the
+    seed/sample rows, or unequal widths, raise ``ValueError`` (the
+    former Spark loop sorted NULL distances first and returned a
+    meaningless codebook).  Where Spark's ANSI int64 arithmetic raised,
+    ``ArithmeticError`` is raised up front: whenever ``dim * (max -
+    min)**2`` (largest squared distance) or ``rows * max|v|`` (largest
+    cell sum) leaves int64 — a sufficient bound, so it may also reject
+    inputs near the limit that the Spark loop survived.
     Returns (cell_id, centroid: array<double>) — drop-in for
     :func:`deterministic_centroids` via ``ivf_topk(centroids=...)``."""
-    dim = _vector_dim(corpus, vec_col)
+    import numpy as np
+
     fx_expr = F.transform(
         F.col(vec_col).cast("array<double>"),
         lambda x: F.floor(x * F.lit(float(scale))).cast("long"),
     )
-    sample = corpus.filter(F.col(id_col) < sample_bound).select(
-        F.col(id_col).alias("sid"), fx_expr.alias("fx")
-    )
-    cents = (
-        corpus.select(F.col(id_col), fx_expr.alias("cfx"))
+    seeds = (
+        corpus.select(F.col(id_col), fx_expr.alias("fx"))
         .orderBy(F.asc(id_col))
         .limit(n_cells)
-        .select(F.col(id_col).alias("cell_id"), "cfx")
+        .collect()
     )
-    for _ in range(iters):
-        dist = F.aggregate(
-            F.zip_with("fx", "cfx", lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        w = Window.partitionBy("sid").orderBy(F.asc("dist"), F.asc("cell_id"))
-        assigned = (
-            sample.crossJoin(F.broadcast(cents))
-            .withColumn("dist", dist)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("cell_id", "fx")
-        )
-        sums = assigned.groupBy("cell_id").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            *[F.sum(F.col("fx")[i]).alias(f"s{i}") for i in range(dim)],
-        )
-        new_c = sums.select(
-            "cell_id",
-            F.array(
-                *[F.floor(F.col(f"s{i}") / F.col("cnt")) for i in range(dim)]
-            ).alias("nfx"),
-        )
-        cents = cents.join(new_c, "cell_id", "left").select(
-            "cell_id", F.coalesce("nfx", "cfx").alias("cfx")
-        )
-    rows = cents.collect()  # bounded: n_cells x dim longs (16 x 64)
-    centers = [
-        (int(r["cell_id"]), [v / float(scale) for v in r["cfx"]]) for r in rows
-    ]
-    spark = corpus.sparkSession
-    return spark.createDataFrame(centers, "cell_id BIGINT, centroid ARRAY<DOUBLE>")
+    sample = corpus.filter(F.col(id_col) < sample_bound).select(fx_expr.alias("fx")).collect()
+    vecs = [r["fx"] for r in seeds + sample]
+    if any(v is None or None in v or len(v) != len(vecs[0]) for v in vecs):
+        raise ValueError(f"lloyd_kmeans_fixed: NULL or unequal-width {vec_col!r} vectors")
+    dim = len(vecs[0]) if vecs else 0
+    cents = np.array(vecs[: len(seeds)], dtype=np.int64).reshape(len(seeds), dim)
+    fx = np.array(vecs[len(seeds) :], dtype=np.int64).reshape(len(sample), dim)
+    if cents.size and fx.size:
+        lo, hi = int(min(fx.min(), cents.min())), int(max(fx.max(), cents.max()))
+        top = np.iinfo(np.int64).max
+        if dim * (hi - lo) ** 2 > top or len(fx) * max(hi, -lo) > top:
+            raise ArithmeticError(f"lloyd_kmeans_fixed: values in [{lo}, {hi}] overflow int64")
+    step = max(1, (1 << 20) // max(1, cents.size))
+    for _ in range(iters if len(cents) and len(fx) else 0):
+        near = np.concatenate([
+            ((fx[i : i + step, None, :] - cents[None]) ** 2).sum(axis=2).argmin(axis=1)
+            for i in range(0, len(fx), step)
+        ])
+        cnt = np.bincount(near, minlength=len(cents))
+        sums = np.zeros_like(cents)
+        np.add.at(sums, near, fx)
+        hit = cnt > 0
+        cents[hit] = np.floor(sums[hit].astype(np.float64) / cnt[hit, None]).astype(np.int64)
+    centers = [(int(r[id_col]), (c / float(scale)).tolist()) for r, c in zip(seeds, cents)]
+    return corpus.sparkSession.createDataFrame(centers, "cell_id BIGINT, centroid ARRAY<DOUBLE>")
 
 
 def ivf_topk(

@@ -172,27 +172,53 @@ def test_in_band_verdicts() -> None:
     assert got == {"a": True, "b": False, "c": None, "d": None}
 
 
-def test_current_bands_from_real_history_and_compact_carries_verdicts() -> None:
-    """End-to-end over the in-repo artifact history: the derived
-    tracking bands must cover every TRACKING_QUERIES member that has
-    parsed history, and the compact line must carry both verdict maps."""
+#: The tracking tier before the r14 additions: the only queries the
+#: synthetic artifact history below measures.
+_LEGACY_TRACKING = (
+    "sim_hnsw_search",
+    "dedup_containment_ensemble",
+    "text_bpe_iterative_deep",
+    "stream_ann_refresh",
+)
+
+
+def _write_history(repo_dir) -> None:
+    """BENCH_r10..r13 in the official artifact shape: r10 unparsed (the
+    pre-compact single-line capture), r11-r13 parsed with headline values
+    and tracking values for the legacy four only."""
+    (repo_dir / "BENCH_r10.json").write_text(json.dumps({"parsed": None}))
+    for r in (11, 12, 13):
+        parsed = {
+            "value": 7.0 + 0.1 * r,
+            "queries": {n: round(0.5 + 0.01 * r, 4) for n in _HEADLINE},
+            "tracking": {n: round(3.0 + 0.1 * r, 4) for n in _LEGACY_TRACKING},
+        }
+        (repo_dir / f"BENCH_r{r}.json").write_text(json.dumps({"parsed": parsed}))
+
+
+def test_current_bands_from_artifact_history_and_compact_carries_verdicts(
+    tmp_path, monkeypatch
+) -> None:
+    """End-to-end over an artifact history in the official shape: the
+    derived tracking bands must cover every TRACKING_QUERIES member that
+    has parsed history, and the compact line must carry both verdict
+    maps.  The history is synthetic so that committing a new BENCH_r*
+    artifact cannot change what this test asserts."""
     bench = _bench()
-    bands = bench.current_bands()
-    assert set(bands["tracking"]) == set(bench.TRACKING_QUERIES)
-    # r11+ artifacts carry tracking values for the original four ->
-    # bands derived, not None; the r14 ADDITIONS (sim_knn_graph,
-    # dedup_semdedup_clustered) have no parsed history yet and must be
-    # band-ABSENT (None), never silently in-band, until official
-    # artifacts accumulate
-    legacy = (
-        "sim_hnsw_search",
-        "dedup_containment_ensemble",
-        "text_bpe_iterative_deep",
-        "stream_ann_refresh",
+    _write_history(tmp_path)
+    real_current_bands = bench.current_bands
+    monkeypatch.setattr(
+        bench, "current_bands", lambda: real_current_bands(repo_dir=str(tmp_path))
     )
-    assert all(bands["tracking"][n] is not None for n in legacy)
+    bands = bench.current_bands()
+    assert bands["rounds"] == [11, 12, 13]
+    assert set(bands["tracking"]) == set(bench.TRACKING_QUERIES)
+    # the legacy four have history -> bands derived, not None; the r14
+    # ADDITIONS (sim_knn_graph, dedup_semdedup_clustered) have no parsed
+    # history and must be band-ABSENT (None), never silently in-band
+    assert all(bands["tracking"][n] is not None for n in _LEGACY_TRACKING)
     for n in bench.TRACKING_QUERIES:
-        if n not in legacy:
+        if n not in _LEGACY_TRACKING:
             assert bands["tracking"][n] is None, n
     assert bands["headline"].get("q1_pricing_summary") is not None
     attempts = [_fake_attempt(bench, 0.1 * i) for i in range(2)]
@@ -202,6 +228,6 @@ def test_current_bands_from_real_history_and_compact_carries_verdicts() -> None:
         v in (True, False, None) for v in compact["headline_in_band"].values()
     )
     assert compact["bands_from"] == bands["rounds"]
-    # the synthetic 6.7891-s tracking values sit far outside every real
+    # the fake 6.7891-s tracking values sit far outside every derived
     # band -> the verdict actually trips False (not silently True)
     assert False in set(compact["tracking_in_band"].values())

@@ -6,6 +6,8 @@ cell.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +16,10 @@ from end_to_end_data_engineering_project_with_databricks_spark.operators.similar
     brute_force_topk,
     deterministic_centroids,
     ivf_topk,
+    lloyd_kmeans_fixed,
+)
+from end_to_end_data_engineering_project_with_databricks_spark.sources.readers import (
+    load_table,
 )
 
 
@@ -446,6 +452,134 @@ def test_lloyd_kmeans_fixed_deterministic_and_trains(spark, emb):
     e = {(r.query_id, r.rank): r.neighbor_id for r in exact.collect()}
     g = {(r.query_id, r.rank): r.neighbor_id for r in approx.collect()}
     assert e == g
+
+
+def _lloyd_cents(df, **params) -> dict:
+    return {r.cell_id: list(r.centroid) for r in lloyd_kmeans_fixed(df, **params).collect()}
+
+
+def _duck_lloyd_cents(con, **params) -> dict:
+    """The ``cents`` CTE of the trained-index DuckDB replay."""
+    from end_to_end_data_engineering_project_with_databricks_spark.queries.similarity import (
+        _lloyd_index_ctes,
+    )
+
+    sql = f"WITH {','.join(_lloyd_index_ctes(**params))} SELECT cell_id, centroid FROM cents"
+    return {int(c): list(v) for c, v in con.execute(sql).fetchall()}
+
+
+#: Seeds 0 and 2 are the same vector, so every near-origin row ties
+#: between cells 0 and 2: the tie must go to cell 0, leaving cell 2 empty.
+_LLOYD_ROWS = [
+    (0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 0.0]), (3, [0.1, 0.0]),
+    (4, [0.0, 0.2]), (5, [0.9, 1.0]), (6, [1.2, 0.8]), (7, [0.05, 0.05]),
+]
+
+
+def _emb_df(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _duck_lloyd_cents_on(rows, **params) -> dict:
+    """:func:`_duck_lloyd_cents` over ``rows`` as the ``embeddings`` table."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+        if rows:
+            con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+        return _duck_lloyd_cents(con, **params)
+
+
+@pytest.mark.parametrize("partitions", [None, 7])
+def test_lloyd_kmeans_fixed_matches_duckdb_replay(spark, sf_dir, partitions):
+    """The driver-side Lloyd fit equals the oracle's SQL replay bit for
+    bit on the fixture embeddings, natively and repartitioned."""
+    from tests.oracle import duckdb_connection
+
+    e = load_table(spark, sf_dir, "embeddings")
+    if partitions:
+        e = e.repartition(partitions)
+    con = duckdb_connection(sf_dir)
+    try:
+        for params in (
+            dict(n_cells=16, iters=2, sample_bound=256),
+            dict(n_cells=8, iters=3, sample_bound=64),
+        ):
+            got = _lloyd_cents(e, **params)
+            assert len(got) == params["n_cells"]
+            assert got == _duck_lloyd_cents(con, **params), params
+    finally:
+        con.close()
+
+
+def test_lloyd_kmeans_fixed_ties_go_to_lowest_cell_and_empty_cells_keep_centroid(spark):
+    rows = _LLOYD_ROWS + [(50, None)]  # a NULL outside the seeds and sample is never read
+    params = dict(n_cells=3, iters=1, sample_bound=8)
+    got = _lloyd_cents(_emb_df(spark, rows), **params)
+    assert got == _duck_lloyd_cents_on(rows, **params)
+    assert got[2] == [0.0, 0.0]  # empty after the tie-break: keeps its seed
+    assert got[0] != [0.0, 0.0]  # took every tied row and moved
+
+
+@pytest.mark.parametrize(
+    "rows, params, n_out",
+    [
+        (_LLOYD_ROWS, dict(n_cells=3, iters=0, sample_bound=8), 3),
+        (_LLOYD_ROWS, dict(n_cells=3, iters=2, sample_bound=0), 3),
+        (_LLOYD_ROWS, dict(n_cells=20, iters=2, sample_bound=8), 8),
+        ([], dict(n_cells=3, iters=2, sample_bound=8), 0),
+    ],
+    ids=["iters0", "no_sample", "cells_above_rows", "empty_corpus"],
+)
+def test_lloyd_kmeans_fixed_degenerate_inputs(spark, rows, params, n_out):
+    df = _emb_df(spark, rows)
+    out = lloyd_kmeans_fixed(df, **params)
+    assert out.schema.simpleString() == "struct<cell_id:bigint,centroid:array<double>>"
+    got = {r.cell_id: list(r.centroid) for r in out.collect()}
+    assert len(got) == n_out
+    assert got == _duck_lloyd_cents_on(rows, **params)
+    if params["iters"] == 0 or params["sample_bound"] == 0:
+        seeds = deterministic_centroids(df, params["n_cells"]).collect()
+        assert got == {
+            r.cell_id: [math.floor(x * 10000.0) / 10000.0 for x in r.centroid] for r in seeds
+        }
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        _LLOYD_ROWS[:5] + [(5, None)] + _LLOYD_ROWS[6:],  # NULL vector in the sample
+        [(0, [None, 0.0])] + _LLOYD_ROWS[1:],  # NULL element in a seed
+    ],
+    ids=["null_vector", "null_element"],
+)
+def test_lloyd_kmeans_fixed_rejects_nulls_it_reads(spark, rows):
+    with pytest.raises(ValueError, match="NULL"):
+        _lloyd_cents(_emb_df(spark, rows), n_cells=3, iters=1, sample_bound=8)
+
+
+def test_lloyd_kmeans_fixed_raises_on_int64_overflow(spark):
+    """Spark's ANSI long arithmetic raised here; NumPy int64 would wrap."""
+    df = _emb_df(spark, _LLOYD_ROWS + [(8, [1e15, 0.0])])
+    with pytest.raises(ArithmeticError, match="overflow int64"):
+        _lloyd_cents(df, n_cells=3, iters=1, sample_bound=9)
+
+
+def test_lloyd_kmeans_fixed_launches_at_most_three_jobs(spark, sf_dir):
+    """Two bounded reads (seeds, sample) and nothing per iteration: a
+    Spark-side Lloyd loop would launch ~12 jobs here."""
+    e = load_table(spark, sf_dir, "embeddings")
+    sc = spark.sparkContext
+    group = "lloyd-kmeans-fixed-job-budget"
+    sc.setJobGroup(group, "lloyd_kmeans_fixed")
+    try:
+        lloyd_kmeans_fixed(e, n_cells=16, iters=2, sample_bound=256)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
 
 
 def test_video_keyframe_ann_plan_shape(spark, sf_dir):
