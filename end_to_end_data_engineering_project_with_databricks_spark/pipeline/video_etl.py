@@ -9,7 +9,7 @@ parameters and a pluggable source:
 | extract   | YouTube ``search.list`` REST call (:28-50)     | ``SearchSource`` protocol|
 | land raw  | pretty JSON to DBFS (:52-73)                   | :func:`load_raw`         |
 | transform | multiline read + explode/flatten (:75-113)     | :func:`transform`        |
-| load      | isEmpty branch + anti-join append (:115-138)   | :func:`load_into_table`  |
+| load      | one observed anti-join append (:115-138)       | :func:`load_into_table`  |
 
 Semantic fine print preserved exactly (SURVEY.md §2.1):
 - dedup is cross-batch only, keyed on ``videoId``; intra-batch duplicates
@@ -33,7 +33,7 @@ import json
 import os
 from typing import Protocol
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_project_with_databricks_spark.pipeline.countries import (
@@ -169,18 +169,20 @@ def load_into_table(
     """Silver -> gold: idempotent append via LEFT ANTI join on ``videoId``.
 
     Parity with ``loadIntoDeltaTable`` (ETL_pipeline_countries.py:115-138):
-    - ``spark.table`` sink scan (:129), ``isEmpty`` branch (:132),
-    - empty sink: append everything, **no dedup** (:133),
-    - else: ``result_df.join(existing, "videoId", "left_anti")`` then
-      append (:137-138).
-    Returns the number of rows appended.
+    ``result_df.join(existing, "videoId", "left_anti")``, then append.  The
+    ``isEmpty`` branch (:132-133) needs no probe: an anti-join against an
+    empty sink keeps every row (intra-batch duplicates and NULL ids too),
+    so the first load still appends everything with **no** dedup.  Returns
+    the rows appended, counted by ``df.observe`` in the one write job.
 
     Extensions (off by default to preserve parity):
     - ``dedup_within_batch``: also drop intra-batch duplicate videoIds
       (the reference keeps them, SURVEY.md §2.1 fine print (a)).
     - ``dedup_scope``: anti-join against this slice of the sink instead of
       the full table — partition-pruned dedup, the 100 TB fix for the
-      reference's O(full-sink) scan per batch.
+      reference's O(full-sink) scan per batch.  It must be a slice of the
+      sink, so it is empty when the sink is; an id outside the slice is
+      appended again (the O(recent) trade-off).
 
     **Single-writer assumption** (same as the reference's scheduled
     notebook, which runs one job at a time): the dedup is check-then-act
@@ -193,25 +195,19 @@ def load_into_table(
     under races (tests/test_versioned_sink.py concurrency tests).
     """
     ensure_sink(spark, table)
-    existing = spark.table(table)
     batch = result_df
     if dedup_within_batch:
         batch = batch.dropDuplicates(["videoId"])
-    if existing.isEmpty():
-        to_append = batch
-    else:
-        scope = dedup_scope if dedup_scope is not None else existing
-        to_append = batch.join(scope, "videoId", "left_anti")
-    # cache: the reference re-executes the whole lazy plan once for the
-    # count/show and again for the write (SURVEY.md §4 "double-execution")
-    to_append = to_append.cache()
-    n = to_append.count()
-    to_append.select(*RESULT_COLUMNS).write.mode("append").insertInto(table)
-    to_append.unpersist()
+    scope = dedup_scope if dedup_scope is not None else spark.table(table)
+    # one observed write: the plan runs once and counts what it appends
+    appended = Observation()
+    to_append = batch.join(scope, "videoId", "left_anti").select(*RESULT_COLUMNS)
+    counted = to_append.observe(appended, F.count(F.lit(1)).alias("rows"))
+    counted.write.mode("append").insertInto(table)
     # drop the cached file listing so this session's next read sees the
     # appended files (sessions cache catalog-table listings independently)
     spark.catalog.refreshTable(table)
-    return n
+    return appended.get["rows"]
 
 
 def run_pipeline(
