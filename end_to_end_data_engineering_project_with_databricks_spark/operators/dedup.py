@@ -21,6 +21,12 @@ on that key — no cross join ever materializes.  At 100 TB the shingle
 explode dominates; it is a narrow map (no shuffle) and the first groupBy
 (signature agg) is the only wide op per document.
 
+One path per step: every banded pipeline builds its band relation with
+:func:`lsh_band_buckets`, its candidate pairs plus the endpoint-filtered
+corpus with :func:`_banded_candidates`, and any verify filters the corpus
+to pair endpoints with :func:`_candidate_docs`.  Clustering
+(:func:`connected_components`) runs one Spark action per round.
+
 Materialization caveat (ADVICE r6): operators whose signature/prefix
 relation feeds BOTH sides of a self-join materialize it with
 ``localCheckpoint(eager=True)``.  That is a deliberate trade: without the
@@ -39,7 +45,7 @@ single-process test/bench envelope where neither failure mode exists.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -232,39 +238,33 @@ def _band_structs_sql(bands: int, rows_per_band: int) -> str:
 
 
 def lsh_band_buckets(
-    signatures: DataFrame,
-    id_col: str,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    materialize: bool = True,
+    signatures: DataFrame, id_col: str, bands: int = 16, rows_per_band: int = 4
 ) -> DataFrame:
-    """The LSH join relation: one ``(_id, band, bh)`` row per band per
-    document.  Factored out of :func:`lsh_candidate_pairs` so the
-    scale-growth audit (operators/scale_audit.py, docs/SCALE.md) can
-    measure band-bucket occupancy on exactly the relation the pair join
-    shuffles.
+    """The LSH band-bucket relation: one ``(_id, band, bh)`` row per band
+    per document, returned LAZY.  It is the relation the pair join of
+    :func:`lsh_candidate_pairs` shuffles, the per-scheme relation of the
+    ensemble's fused join, the scale-growth audit's occupancy input
+    (operators/scale_audit.py, docs/SCALE.md), and the index a
+    recurring-ingest pipeline persists once per corpus snapshot
+    (partitioned/bucketed by (band, bh) at scale) so that every later
+    increment joins against it instead of re-signing the corpus
+    (:func:`minhash_lsh_dedup_incremental`).
 
-    Materialized BEFORE the self-join: both join sides reference this
-    subtree, and without a materialization point Spark re-plans (and
+    Callers that reference it from both sides of a self-join materialize
+    it themselves: without a materialization point Spark re-plans (and
     re-computes) the entire signature pipeline once per side — measured
-    1.6 s vs 1.4 s warm and 10 s vs 2.8 s cold at sf0.1.  At 100 TB this
-    is the in-plan form of the persisted lsh_bucket_index: one (band, bh)
-    row per band per document, num_hashes/rows_per_band small rows per
-    doc — far smaller than the corpus.  localCheckpoint blocks are
-    released by the context cleaner when the DataFrame is unreferenced
-    (see minhash_lsh_dedup)."""
+    1.6 s vs 1.4 s warm and 10 s vs 2.8 s cold at sf0.1.  The ensemble
+    instead unions several schemes over an ALREADY-checkpointed signature
+    relation and materializes the fused union once — per-scheme
+    deserialized checkpoint blocks are heap the stock 1 GiB envelope
+    cannot spare, and the recompute they avoid is only the band
+    projection over sigs."""
     # fully-literal unrolled SQL (see minhash_signatures: literal indices
     # keep `sig` multi-referenced so its projection is not inlined)
     band_structs = F.expr(_band_structs_sql(bands, rows_per_band))
-    out = signatures.select(
+    return signatures.select(
         F.col(id_col).alias("_id"), F.explode(band_structs).alias("b")
     ).select("_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    # materialize=False: callers that union several schemes over an
-    # ALREADY-checkpointed signature relation (the ensemble) materialize
-    # the fused union once instead — per-scheme deserialized checkpoint
-    # blocks are heap the stock 1 GiB envelope cannot spare, and the
-    # recompute they avoid is only the band projection over sigs.
-    return out.localCheckpoint(eager=True) if materialize else out
 
 
 def lsh_candidate_pairs(
@@ -280,9 +280,14 @@ def lsh_candidate_pairs(
     kick in at scale.  Each document emits exactly one (band, hash) per
     band index, so bucket rows are distinct by construction — no dedup
     shuffle before the join.
-    Returns distinct (id_a, id_b) with id_a < id_b.
+    Returns distinct (id_a, id_b) with id_a < id_b.  The bucket relation
+    is materialized once (both join sides reference it); checkpoint
+    blocks are released by the context cleaner when the DataFrame is
+    unreferenced.
     """
-    buckets = lsh_band_buckets(signatures, id_col, bands, rows_per_band)
+    buckets = lsh_band_buckets(signatures, id_col, bands, rows_per_band).localCheckpoint(
+        eager=True
+    )
     left = buckets.select(F.col("_id").alias("id_a"), "band", "bh")
     right = buckets.select(F.col("_id").alias("id_b"), "band", "bh")
     return (
@@ -330,6 +335,33 @@ def jaccard_verify(
     )
 
 
+def _candidate_docs(
+    df: DataFrame, pairs: DataFrame, id_col: str, a: str = "id_a", b: str = "id_b"
+) -> DataFrame:
+    """Semi-filter ``df`` to the documents that are an endpoint of some
+    pair, so a verify re-scans and re-shingles only candidate documents.
+    At 100 TB candidates are a vanishing fraction of the corpus.  The
+    semi-join is left to Catalyst/AQE: a broadcast hint would force the
+    endpoint-id set driver-side, which at 100 TB can exceed broadcast
+    limits — AQE already broadcasts it when it is actually small."""
+    ids = pairs.select(F.col(a).alias("_cid")).union(pairs.select(b)).distinct()
+    return df.join(ids, F.col(id_col) == F.col("_cid"), "left_semi")
+
+
+def _banded_candidates(
+    df: DataFrame, sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
+) -> tuple[DataFrame, DataFrame]:
+    """The candidate half of every banded LSH pipeline: the distinct
+    band-sharing pairs of ``sigs``, materialized once (the verify
+    references them as the pair stream AND through the endpoint filter),
+    plus ``df`` semi-filtered to their endpoints.  Returns
+    ``(cands, cand_docs)``."""
+    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).localCheckpoint(
+        eager=True
+    )
+    return cands, _candidate_docs(df, cands, id_col)
+
+
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str,
@@ -346,29 +378,15 @@ def minhash_lsh_dedup(
 
     The candidate set is materialized once with ``localCheckpoint`` (the
     deliberate materialization point of the pipeline — it is referenced
-    three times below; unlike ``persist`` without a matching
-    ``unpersist``, checkpoint blocks are released by the context cleaner
-    as soon as the DataFrame is unreferenced, so repeated pipeline runs
-    in one session don't accumulate cached candidate sets) and the
-    corpus is semi-filtered to candidate documents before verification,
-    so the expensive shingle recomputation touches only docs that appear
-    in some pair, not the whole corpus twice.  At 100 TB candidates are
-    a vanishing fraction of the corpus; without this filter verification
-    would re-scan and re-shingle everything.  The semi-join is left to
-    Catalyst/AQE: a broadcast hint here would force the candidate-id set
-    driver-side, which at 100 TB can exceed broadcast limits — AQE
-    already broadcasts it when it is actually small."""
-    rows_per_band = num_hashes // bands
+    three times; unlike ``persist`` without a matching ``unpersist``,
+    checkpoint blocks are released by the context cleaner as soon as the
+    DataFrame is unreferenced, so repeated pipeline runs in one session
+    don't accumulate cached candidate sets) and the corpus is
+    semi-filtered to candidate documents before verification, so the
+    expensive shingle recomputation touches only docs that appear in
+    some pair, not the whole corpus twice (:func:`_banded_candidates`)."""
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).localCheckpoint(
-        eager=True
-    )
-    ids = (
-        cands.select(F.col("id_a").alias("_cid"))
-        .union(cands.select("id_b"))
-        .distinct()
-    )
-    cand_docs = df.join(ids, F.col(id_col) == F.col("_cid"), "left_semi")
+    cands, cand_docs = _banded_candidates(df, sigs, id_col, bands, num_hashes // bands)
     return jaccard_verify(cands, cand_docs, id_col, text_col, shingle_k, threshold)
 
 
@@ -410,17 +428,8 @@ def containment_lsh_pairs(
     candidate docs before the verify scan), and the verify is two
     id-equi-joins against per-document sorted shingle arrays — cost
     O(candidates), never O(n^2)."""
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).localCheckpoint(
-        eager=True
-    )
-    ids = (
-        cands.select(F.col("id_a").alias("_cid"))
-        .union(cands.select("id_b"))
-        .distinct()
-    )
-    cand_docs = df.join(ids, F.col(id_col) == F.col("_cid"), "left_semi")
+    cands, cand_docs = _banded_candidates(df, sigs, id_col, bands, num_hashes // bands)
     sets = (
         scale_out(cand_docs)
         .select(
@@ -721,9 +730,9 @@ def containment_lsh_ensemble_pairs(
     tagged = None
     strata_map = None
     for si, (lo, hi, bands, rows_per_band) in enumerate(strata):
-        b = lsh_band_buckets(
-            sigs, id_col, bands, rows_per_band, materialize=False
-        ).withColumn("_s", F.lit(si))
+        b = lsh_band_buckets(sigs, id_col, bands, rows_per_band).withColumn(
+            "_s", F.lit(si)
+        )
         tagged = b if tagged is None else tagged.unionByName(b)
         in_stratum = F.col("n") >= lo if hi is None else (
             (F.col("n") >= lo) & (F.col("n") < hi)
@@ -768,11 +777,6 @@ def containment_lsh_ensemble_pairs(
         eager=True, storageLevel=ckpt_level
     )
 
-    ids = (
-        cand.select(F.col("id_q").alias("_cid"))
-        .union(cand.select("id_i"))
-        .distinct()
-    )
     # verify sets: the per-doc distinct HASHED shingle array, computed
     # directly in the scan projection over the candidate-semi-filtered
     # corpus (r13).  This replaces the explode -> semi-join -> groupBy ->
@@ -787,10 +791,7 @@ def containment_lsh_ensemble_pairs(
     # on every fixture.
     sets = (
         _hashed_shingle_docs(
-            df.join(ids, F.col(id_col) == F.col("_cid"), "left_semi"),
-            id_col,
-            text_col,
-            shingle_k,
+            _candidate_docs(df, cand, id_col, "id_q", "id_i"), id_col, text_col, shingle_k
         )
         .select("_id_", F.col("_sh").alias("_set"), F.size("_sh").alias("n"))
         # referenced by both join sides; DISK_ONLY when oversized —
@@ -835,17 +836,27 @@ def connected_components(
     This is the step every production dedup pipeline needs after
     candidate pairs: near-duplication is transitive in intent (A~B, B~C
     -> one cluster) but pairwise in measurement, so keep-one-per-cluster
-    requires the transitive closure.  Each iteration is one join + one
-    min-aggregate (two key shuffles); iterations = graph diameter, and
-    near-dup graphs are shallow (clusters are cliques-ish), so 2-4
+    requires the transitive closure.  Each round is one join + one
+    min-aggregate (two key shuffles); a label moves one hop per round,
+    so rounds = graph diameter + 1 (the last one confirms the fixpoint),
+    and near-dup graphs are shallow (clusters are cliques-ish), so a few
     rounds typically converge.  Each round's labels are materialized
     with ``localCheckpoint`` — iterative DataFrames MUST truncate
     lineage, since the label plan references itself and doubles per
     round (exponential analysis cost by ~iteration 20 otherwise); the
-    checkpoint makes every round's plan O(1).  The loop exits on a
-    driver-side converged check — the standard Spark shape for
-    iterative algorithms (same skeleton as large-star/small-star at
-    planetary scale).
+    checkpoint makes every round's plan O(1).
+
+    Convergence is observed, not probed: each node's previous label rides
+    the union + ``min`` aggregate, and ``df.observe`` counts the lowered
+    labels inside the round's own checkpoint job, so a round is ONE Spark
+    action and the driver reads one number back.  The count is safe under
+    task retries: a recomputed task re-derives the same labels and can
+    only recount lowered ones, so a zero means no label moved and a
+    positive count stays positive.  The loop stops at the first round
+    that lowers no label; if ``max_iter`` rounds all lowered some label,
+    the labels are not a fixpoint and a ``RuntimeError`` is raised
+    instead of returning them.  Large-star/small-star (Kiveris et al.,
+    SoCC 2014) bounds rounds by O(log n) on the same skeleton.
     """
     sym = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
@@ -858,27 +869,25 @@ def connected_components(
         .localCheckpoint()
     )
     for _ in range(max_iter):
-        neigh = sym.join(
-            labels, sym.src == labels.node
-        ).select(F.col("dst").alias("node"), "component")
-        new_labels = (
-            labels.unionByName(neigh)
+        neigh = sym.join(labels, sym.src == labels.node).select(
+            F.col("dst").alias("node"), "component", F.lit(None).alias("_old")
+        )
+        lowered = Observation()
+        labels = (
+            labels.withColumn("_old", F.col("component"))
+            .unionByName(neigh)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
+            .agg(F.min("component").alias("component"), F.min("_old").alias("_old"))
+            .observe(lowered, F.count_if(F.col("component") < F.col("_old")).alias("n"))
+            .select("node", "component")
             .localCheckpoint()
         )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("component", "old"), "node"
-            )
-            .filter(F.col("component") != F.col("old"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+        if lowered.get["n"] == 0:
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after max_iter={max_iter} "
+        "rounds; the pair graph's diameter exceeds it"
+    )
 
 
 def simhash64(hashes_col: Column | str, n_bits: int = 64) -> Column:
@@ -1112,32 +1121,9 @@ def oph_minhash_lsh_dedup(
     exact-Jaccard verify filters candidates, the OUTPUT contract is the
     same one-sided semantics: no false positives ever; misses only if
     every band disagrees."""
-    rows_per_band = num_buckets // bands
     sigs = oph_signatures(df, id_col, text_col, num_buckets, shingle_k)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).localCheckpoint(
-        eager=True
-    )
-    ids = (
-        cands.select(F.col("id_a").alias("_cid"))
-        .union(cands.select("id_b"))
-        .distinct()
-    )
-    cand_docs = df.join(ids, F.col(id_col) == F.col("_cid"), "left_semi")
+    cands, cand_docs = _banded_candidates(df, sigs, id_col, bands, num_buckets // bands)
     return jaccard_verify(cands, cand_docs, id_col, text_col, shingle_k, threshold)
-
-
-def lsh_bucket_index(
-    signatures: DataFrame, id_col: str, bands: int = 16, rows_per_band: int = 4
-) -> DataFrame:
-    """The persisted LSH index: one (id, band, band_hash) row per band
-    per document — what a recurring-ingest pipeline writes ONCE per
-    corpus snapshot (partitioned/bucketed by (band, bh) at scale) so
-    every later increment joins against it instead of re-signing the
-    corpus.  Same band hashing as :func:`lsh_candidate_pairs`."""
-    band_structs = F.expr(_band_structs_sql(bands, rows_per_band))
-    return signatures.select(
-        F.col(id_col).alias("_id"), F.explode(band_structs).alias("b")
-    ).select("_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
 
 
 def minhash_lsh_dedup_incremental(
@@ -1175,11 +1161,11 @@ def minhash_lsh_dedup_incremental(
     # referenced twice below (as the probe side AND inside `other`) —
     # materialize so the increment is signed once, mirroring
     # lsh_candidate_pairs' bucket materialization
-    new_buckets = lsh_bucket_index(
+    new_buckets = lsh_band_buckets(
         new_sigs, id_col, bands, rows_per_band
     ).localCheckpoint(eager=True)
     if corpus_index is None:
-        corpus_index = lsh_bucket_index(
+        corpus_index = lsh_band_buckets(
             minhash_signatures(corpus_df, id_col, text_col, num_hashes, shingle_k),
             id_col,
             bands,
@@ -1200,13 +1186,7 @@ def minhash_lsh_dedup_incremental(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    ids = (
-        cands.select(F.col("id_a").alias("_cid"))
-        .union(cands.select("id_b"))
-        .distinct()
-    )
-    all_docs = new_df.unionByName(corpus_df)
-    cand_docs = all_docs.join(ids, F.col(id_col) == F.col("_cid"), "left_semi")
+    cand_docs = _candidate_docs(new_df.unionByName(corpus_df), cands, id_col)
     return jaccard_verify(cands, cand_docs, id_col, text_col, shingle_k, threshold)
 
 
@@ -1341,15 +1321,8 @@ def duplicated_spans(
 
     # Exact verify (hash-collision guard): the claimed token slices must
     # be equal.  Joins touch only documents that appear in some span.
-    ids = (
-        spans.select(F.col("id_a").alias("_cid"))
-        .union(spans.select("id_b"))
-        .distinct()
-    )
-    toks_df = (
-        scale_out(df)
-        .join(ids, F.col(id_col) == F.col("_cid"), "left_semi")
-        .select(F.col(id_col).alias("_vid"), tokens(text_col).alias("_tk"))
+    toks_df = _candidate_docs(scale_out(df), spans, id_col).select(
+        F.col(id_col).alias("_vid"), tokens(text_col).alias("_tk")
     )
     ta = toks_df.select(F.col("_vid").alias("id_a"), F.col("_tk").alias("_tka"))
     tb = toks_df.select(F.col("_vid").alias("id_b"), F.col("_tk").alias("_tkb"))

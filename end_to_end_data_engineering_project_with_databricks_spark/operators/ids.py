@@ -44,52 +44,17 @@ def assign_sequential_ids(
     id_col: str = "row_id",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Add ``id_col`` = the 0-based global rank of ``order_col``.
+    """Add ``id_col`` = the 0-based global rank of ``order_col``: the
+    unit-weight case of :func:`assign_prefix_sums` (id = inclusive count
+    - 1), so both share one two-pass shape (module docstring).
 
     Requires ``order_col`` to be a total order (unique values) for a
     deterministic result — pass a composite struct column to break
-    ties.  See module docstring for the two-pass shape.
+    ties.
     """
-    parts = (
-        df.repartitionByRange(num_partitions, order_col)
-        if num_partitions
-        else df.repartitionByRange(order_col)
-    ).sortWithinPartitions(order_col)
-    # materialize once: both passes read these blocks, so the range
-    # exchange + sort run a single time (blocks are freed by the context
-    # cleaner when the result is unreferenced)
-    parts = parts.localCheckpoint(eager=True)
-    with_pid = parts.withColumn("_pid", F.spark_partition_id())
-
-    # pass 1: per-partition counts -> global offsets (rows == #partitions)
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in with_pid.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    out_schema = with_pid.drop("_pid").schema.add(id_col, "long")
-
-    # pass 2: narrow Arrow pass; repartitionByRange guarantees partition
-    # pid holds the pid-th contiguous slice of the global order, and the
-    # sortWithinPartitions order is preserved into mapInPandas batches
-    def add_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pos = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pos is None:
-                pos = offsets[int(pdf["_pid"].iloc[0])]
-            out = pdf.drop(columns=["_pid"])
-            out[id_col] = range(pos, pos + len(pdf))
-            pos += len(pdf)
-            yield out
-
-    return with_pid.mapInPandas(add_ids, out_schema)
+    unit = df.withColumn("_unit_w", F.lit(1))
+    counted, _ = assign_prefix_sums(unit, order_col, "_unit_w", id_col, num_partitions)
+    return counted.select(*df.columns, (F.col(id_col) - 1).alias(id_col))
 
 
 def assign_prefix_sums(
@@ -101,13 +66,16 @@ def assign_prefix_sums(
 ) -> tuple[DataFrame, int]:
     """Add ``out_col`` = the INCLUSIVE global running sum of ``weight_col``
     in ``order_col`` order, plus the grand total — the weighted
-    generalization of :func:`assign_sequential_ids` (same two-pass
-    zipWithIndex shape: range partition + sort, per-partition weight
-    totals collected once — one row per PARTITION — then a narrow Arrow
-    pass adds offset + local cumsum).  A plain
+    generalization of the zipWithIndex shape (range partition + sort,
+    per-partition weight totals collected once — one row per PARTITION
+    — then a narrow Arrow pass adds offset + local cumsum);
+    :func:`assign_sequential_ids` is its unit-weight case.  A plain
     ``SUM() OVER (ORDER BY ...)`` with no PARTITION BY would funnel the
     corpus through one reducer; this never does.  Weights must be
     non-negative integers for exact arithmetic."""
+    # materialize once: both passes read these blocks, so the range
+    # exchange + sort run a single time (blocks are freed by the context
+    # cleaner when the result is unreferenced)
     parts = (
         df.repartitionByRange(num_partitions, order_col)
         if num_partitions
@@ -131,6 +99,9 @@ def assign_prefix_sums(
 
     out_schema = with_pid.drop("_pid").schema.add(out_col, "long")
 
+    # pass 2: narrow Arrow pass; repartitionByRange guarantees partition
+    # pid holds the pid-th contiguous slice of the global order, and the
+    # sortWithinPartitions order is preserved into mapInPandas batches
     def add_cums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pos = None
         for pdf in batches:

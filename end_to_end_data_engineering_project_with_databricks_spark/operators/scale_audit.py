@@ -165,7 +165,9 @@ def lsh_growth_stats(
     sigs = minhash_signatures(
         docs, id_col, text_col, num_hashes=bands * rows_per_band
     )
-    buckets = lsh_band_buckets(sigs, id_col, bands, rows_per_band)
+    buckets = lsh_band_buckets(sigs, id_col, bands, rows_per_band).localCheckpoint(
+        eager=True
+    )
     occ = buckets.groupBy("band", "bh").agg(F.count("*").alias("occ"))
     row = occ.agg(
         F.max("occ").alias("max_bucket"),
@@ -664,7 +666,9 @@ def ensemble_growth_stats(
     per_stratum: dict[str, dict] = {}
     cand = None
     for lo, hi, bands, rows_per_band in ENSEMBLE_STRATA:
-        buckets = lsh_band_buckets(sigs, id_col, bands, rows_per_band)
+        buckets = lsh_band_buckets(
+            sigs, id_col, bands, rows_per_band
+        ).localCheckpoint(eager=True)
         in_stratum = F.col("n") >= lo if hi is None else (
             (F.col("n") >= lo) & (F.col("n") < hi)
         )

@@ -804,6 +804,14 @@ def knn_graph_within_cells(
     ordered largest — exactly Spark's ``row_number`` over
     ``desc(score), asc(nbr_id)`` (NaN sorts first under DESC).
 
+    NaN caveat: a zero-norm vector scores NaN against every member of
+    its cell (0/0).  Those rows are still ranked (NaN largest, above),
+    but pandas -> Arrow emits the NaN score double as NULL, so ``score``
+    reads NULL where the JVM fold and DuckDB's oracle would carry NaN.
+    Outputs are bit-identical to the fold only on inputs with no
+    zero-norm vector; a future fixture that has one is not an oracle
+    regression.
+
     100 TB shape: ONE shuffle — the groupBy(cell_id) collect of
     (id, vec) member structs — versus the join form's co-partition of
     both sides PLUS the K²-row window sort per cell.  Both forms
@@ -878,7 +886,14 @@ def threshold_pairs_within_cells(
     (identical bit-exactness and bounded-cell arguments; emitted rows
     are only the QUALIFYING pairs, never the K² candidate stream).
     Returns (id_a, id_b, cell_id, score) with score >= threshold,
-    scores bit-identical to the hoisted-norm JVM fold."""
+    scores bit-identical to the hoisted-norm JVM fold.
+
+    NaN caveat: a pair involving a zero-norm vector scores NaN (0/0).
+    NumPy's ``NaN >= threshold`` is False, so such pairs are never
+    emitted, whereas DuckDB's total-order comparison (NaN largest) would
+    keep them; and a NaN that did reach a row would cross pandas ->
+    Arrow as NULL.  The oracle replays this output unchanged only on
+    inputs with no zero-norm vector."""
     cells = assigned.select(
         F.col("cell_id"),
         F.struct(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")).alias(

@@ -780,10 +780,12 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     the step that turns pairwise near-dup measurements into
     keep-one-per-cluster groups (A~B, B~C -> one cluster even when A~C
     was never measured).  The Spark side is a driver-bounded loop of
-    join + min-aggregate rounds (iterations = graph diameter); the
-    oracle is DuckDB's recursive CTE computing the same closure — the
-    one query pairing an iterative DataFrame algorithm with a recursive
-    SQL oracle."""
+    join + min-aggregate rounds (graph diameter + 1 of them), one Spark
+    action each: the round's checkpoint job also counts the lowered
+    labels, and the loop stops at the first round that lowers none (it
+    raises if ``max_iter`` runs out first).  The oracle is DuckDB's
+    recursive CTE computing the same closure — the one query pairing an
+    iterative DataFrame algorithm with a recursive SQL oracle."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     sh = d.select("doc_id", F.explode(shingles("text", 3)).alias("shingle"))
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))

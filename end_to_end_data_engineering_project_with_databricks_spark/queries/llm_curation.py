@@ -920,7 +920,7 @@ def pipeline_declarative_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst fuses the whole pipeline into one optimized job (gold's
     aggregation pushes its column pruning all the way into bronze's
     parquet scan).  Violation counts ride the Observation API — zero
-    extra passes (see operators/audit.py)."""
+    extra passes (see pipeline/declarative.py)."""
     from end_to_end_data_engineering_project_with_databricks_spark.pipeline.declarative import (
         Pipeline,
     )

@@ -182,18 +182,19 @@ def test_misra_gries_superset_guarantee_under_adversarial_partitioning(spark):
 
 
 def test_observed_metrics_match_recount_without_second_scan(spark, sf_dir, tmp_path):
-    """operators/audit.observed: gate metrics accumulated during the one
-    write action equal a separate recount — the no-second-pass audit."""
+    """``df.observe``: gate metrics accumulated during the one write
+    action equal a separate recount — the no-second-pass audit that
+    pipeline/declarative.py and pipeline/video_etl.py rely on."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from end_to_end_data_engineering_project_with_databricks_spark.operators.audit import observed
     from end_to_end_data_engineering_project_with_databricks_spark.sources.readers import load_table
 
     d = load_table(spark, sf_dir, "documents")
     gated = d.filter(F.col("n_chars") >= 100)
-    instrumented, obs = observed(
-        gated,
-        "quality_gate",
+    obs = Observation("quality_gate")
+    instrumented = gated.observe(
+        obs,
         F.count("*").alias("rows_kept"),
         F.sum("n_chars").alias("chars_kept"),
     )

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_data_engineering_project_with_databricks_spark.operators.dedup import (
+    connected_components,
     exact_dedup,
     jaccard_verify,
     minhash_lsh_dedup,
@@ -449,3 +450,72 @@ def test_drop_duplicated_spans_rewrite_semantics(spark):
     assert (out[2].tokens_before, out[2].tokens_after) == (8, 2)
     assert out[3].rewritten == ["x", "y", "z"] and not out[3].affected
     assert out[4].rewritten == [] and out[4].tokens_after == 0 and out[4].affected
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(pairs, "id_a long, id_b long")
+
+
+def _components(spark, pairs, **kw):
+    """connected_components collected under a deadline, so an observed
+    count that never arrives fails the test instead of hanging the suite."""
+    import threading
+
+    out = []
+    t = threading.Thread(
+        target=lambda: out.append(
+            dict(connected_components(_edges(spark, pairs), **kw).collect())
+        ),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=180)
+    assert out, "connected_components did not return"
+    return out[0]
+
+
+def test_connected_components_runs_one_action_per_round(spark):
+    """A 5-node path converges in diameter + 1 = 5 rounds.  Each round is
+    one Spark action — its checkpoint, which also counts the lowered
+    labels — on top of the two setup checkpoints.  AQE submits every
+    query stage of an action as its own job, so the budget counts the
+    SQL executions (actions) the group's jobs belong to; a separate
+    convergence probe would double the per-round count."""
+    edges = _edges(spark, [(i, i + 1) for i in range(4)])
+    sc = spark.sparkContext
+    group = "connected-components-job-budget"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        labels = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    store = spark._jsparkSession.sharedState().statusStore()
+    recent = store.executionsList(max(int(store.executionsCount()) - 64, 0), 64)
+    actions = set()
+    for i in range(recent.length()):
+        ex = recent.apply(i)
+        ex_jobs = {int(j) for j in ex.jobs().keys().mkString(",").split(",") if j}
+        if ex_jobs & jobs:
+            actions.add(ex.executionId())
+    assert jobs and len(actions) <= 5 + 2, (len(actions), sorted(jobs))
+    assert dict(labels.collect()) == {i: 0 for i in range(5)}
+
+
+def test_connected_components_no_pairs_returns_empty(spark):
+    assert _components(spark, []) == {}
+
+
+def test_connected_components_self_loops_and_duplicate_edges(spark):
+    pairs = [(3, 3), (1, 2), (1, 2), (2, 1), (5, 6), (6, 6), (6, 5)]
+    assert _components(spark, pairs) == {1: 1, 2: 1, 3: 3, 5: 5, 6: 5}
+
+
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    """Labels still moving after max_iter rounds are not a fixpoint: the
+    5-node path needs 5 rounds, so 5 converge and 4 raise."""
+    path = [(i + 1, i) for i in range(4)]
+    assert _components(spark, path, max_iter=5) == {i: 0 for i in range(5)}
+    with pytest.raises(RuntimeError, match="max_iter=4"):
+        connected_components(_edges(spark, path), max_iter=4)
