@@ -14,6 +14,12 @@ Scale design:
   are pre-assigned to their nearest centroid (an O(n x c) broadcast map
   pass done once, amortized), and each query scores only vectors in its
   ``nprobe`` nearest cells — the standard recall/throughput dial.
+- One path per mechanism: every within-cell scorer (k-NN graph,
+  SemDeDup threshold pairs) runs on the one Arrow/NumPy kernel
+  :func:`_score_within_cells`; every sign-projection code (banded
+  threshold LSH, ``rp_lsh_topk`` buckets) comes from :func:`rp_dots` +
+  :func:`rp_band_structs_from_dots`; both PQ/ADC scorers share the
+  :func:`_adc_index` prelude (codebook, LUT and score SQL).
 """
 
 from __future__ import annotations
@@ -722,60 +728,76 @@ def ivf_topk(
 _CELL_SCORE_CHUNK_DOUBLES = 4_000_000
 
 
-def _cell_scorer_helpers():
-    """The NumPy kernels shared by both cell scorers, returned as LOCAL
-    closures so cloudpickle ships them BY VALUE inside the mapInPandas
-    function: a module-level helper would be pickled by reference, and
-    the Python workers of a driver that imported this package via a
-    sys.path edit (the external-driver contract — __spark_entry__ run
-    from an arbitrary cwd) cannot import the module (caught by the
-    r14 verify drive: ModuleNotFoundError in the worker)."""
+def _score_within_cells(
+    assigned: DataFrame, id_col: str, vec_col: str, schema: str, emit
+) -> DataFrame:
+    """The one within-cell scoring kernel: ``groupBy(cell_id)`` collects
+    each cell's (id, vec) member structs, and one ``mapInPandas`` pass
+    scores every cell with NumPy and hands each source row's exact
+    cosine row to ``emit(out, cell_id, ids, si, row)``, which appends
+    the rows it keeps to ``out`` (one list per ``schema`` column).
 
-    def members_sorted(pdf_cell):
-        """(ids asc, vectors as float64 matrix) for one collected cell —
-        id-sorted so index order IS id order (deterministic regardless
-        of the collect_list arrival order, and i < j in index space
-        means id_i < id_j for the pair emitters)."""
+    Per cell: members are id-sorted (index order IS id order, whatever
+    the collect_list arrival order, so ``i < j`` means ``id_i < id_j``),
+    norms and dot products accumulate STRICTLY LEFT-TO-RIGHT over the
+    vector elements — bit-identical to the JVM ``aggregate(zip_with(...))``
+    fold (functions/vectors.py): per pair the products a_j*b_j add in
+    index order starting from 0.0, each an IEEE-754 double op, and the
+    score is dot/(n_src*n_nbr) with the norms multiplied src-first like
+    the hoisted-norm JVM form (IEEE sqrt is correctly rounded, and
+    float32 inputs widen to float64 exactly).  Source rows are scored in
+    blocks so the block x K matrix stays under
+    :data:`_CELL_SCORE_CHUNK_DOUBLES`; cells of fewer than two members
+    emit nothing.
+
+    The function shipped to ``mapInPandas`` references only local
+    closures and values, never a module-level helper of this package:
+    cloudpickle ships nested functions BY VALUE but module-level ones by
+    reference, and the Python workers of a driver that imported this
+    package via a sys.path edit (__spark_entry__ run from an arbitrary
+    cwd) cannot import it (r14: ModuleNotFoundError in the worker).
+    ``emit`` must follow the same rule."""
+    cells = assigned.select(
+        F.col("cell_id"),
+        F.struct(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")).alias(
+            "_mem"
+        ),
+    ).groupBy("cell_id").agg(F.collect_list("_mem").alias("_m"))
+    names = [f.split()[0] for f in schema.split(",")]
+    chunk = _CELL_SCORE_CHUNK_DOUBLES
+
+    def _score_cells(batches):
         import numpy as np
+        import pandas as pd
 
-        ids = np.fromiter((r["vec_id"] for r in pdf_cell), dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        vecs = np.array(
-            [np.asarray(pdf_cell[i]["embedding"], dtype=np.float64) for i in order]
-        )
-        return ids, vecs
+        for pdf in batches:
+            out = {c: [] for c in names}
+            for cell_id, mem in zip(pdf["cell_id"], pdf["_m"]):
+                kk = len(mem)
+                if kk < 2:
+                    continue
+                ids = np.fromiter((r["vec_id"] for r in mem), dtype=np.int64)
+                order = np.argsort(ids, kind="stable")
+                ids = ids[order]
+                vecs = np.array(
+                    [np.asarray(mem[i]["embedding"], dtype=np.float64) for i in order]
+                )
+                sq = np.zeros(kk)
+                for j in range(vecs.shape[1]):
+                    sq = sq + vecs[:, j] * vecs[:, j]
+                norms = np.sqrt(sq)
+                block = max(1, chunk // kk)
+                for s0 in range(0, kk, block):
+                    vb = vecs[s0 : s0 + block]
+                    acc = np.zeros((vb.shape[0], kk))
+                    for j in range(vecs.shape[1]):
+                        acc = acc + np.outer(vb[:, j], vecs[:, j])
+                    S = acc / np.outer(norms[s0 : s0 + block], norms)
+                    for bi in range(vb.shape[0]):
+                        emit(out, cell_id, ids, s0 + bi, S[bi])
+            yield pd.DataFrame(out)
 
-    def block_scores(vb, v, nb, n):
-        """Exact cosine score matrix of a source block against all cell
-        members, accumulated STRICTLY LEFT-TO-RIGHT over the vector
-        elements — bit-identical to the JVM ``aggregate(zip_with(...))``
-        fold (functions/vectors.py): per pair, the products a_j*b_j add
-        in index order starting from 0.0, each an IEEE-754 double op,
-        and the final division is dot/(n_src*n_nbr) with the norms
-        multiplied in the same src-first order as the hoisted-norm JVM
-        form.  float32 inputs widen to float64 exactly (every binary32
-        is a binary64), matching the fold's cast to array<double>."""
-        import numpy as np
-
-        acc = np.zeros((vb.shape[0], v.shape[0]))
-        for j in range(v.shape[1]):
-            acc = acc + np.outer(vb[:, j], v[:, j])
-        return acc / np.outer(nb, n)
-
-    def norms(v):
-        """Per-row L2 norms with the same strict left-to-right
-        accumulation (sqrt of the fold of squares — IEEE sqrt is
-        correctly rounded, so the double equals the JVM
-        ``sqrt(dot(a, a))``)."""
-        import numpy as np
-
-        acc = np.zeros(v.shape[0])
-        for j in range(v.shape[1]):
-            acc = acc + v[:, j] * v[:, j]
-        return np.sqrt(acc)
-
-    return members_sorted, block_scores, norms
+    return cells.mapInPandas(_score_cells, schema=schema)
 
 
 def knn_graph_within_cells(
@@ -797,12 +819,13 @@ def knn_graph_within_cells(
     pair), the K² dot products run as 64 vectorized NumPy
     multiply-accumulates, and only the k*K result rows ever exist as
     rows.  Scores are BIT-IDENTICAL to the fold by construction
-    (:func:`_cell_block_scores` — verified row-identical on the
+    (:func:`_score_within_cells` — verified row-identical on the
     fixtures, and the DuckDB oracle replays the same values).
 
     Ordering contract: rank 1..k by (score DESC, nbr_id ASC) with NaN
     ordered largest — exactly Spark's ``row_number`` over
-    ``desc(score), asc(nbr_id)`` (NaN sorts first under DESC).
+    ``desc(score), asc(nbr_id)`` (NaN sorts first under DESC).  A cell
+    of K <= k members gives each source its K-1 neighbors.
 
     NaN caveat: a zero-norm vector scores NaN against every member of
     its cell (0/0).  Those rows are still ranked (NaN largest, above),
@@ -823,54 +846,27 @@ def knn_graph_within_cells(
     form's K²-row sort buffer.  A cell whose raw members overflow a
     task is exactly the cell whose K² window partition already could
     not sort — the knob is n_cells in both shapes."""
-    cells = assigned.select(
-        F.col("cell_id"),
-        F.struct(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")).alias(
-            "_mem"
-        ),
-    ).groupBy("cell_id").agg(F.collect_list("_mem").alias("_m"))
-    members_sorted, block_scores, cell_norms = _cell_scorer_helpers()
-    chunk = _CELL_SCORE_CHUNK_DOUBLES
 
-    def _cell_topk(batches):
+    def _emit_topk(out, cell_id, ids, si, row):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = {"src_id": [], "nbr_id": [], "score": [], "rank": []}
-            for mem in pdf["_m"]:
-                ids, vecs = members_sorted(mem)
-                kk = len(ids)
-                if kk < 2:
-                    continue
-                norms = cell_norms(vecs)
-                block = max(1, chunk // kk)
-                for s0 in range(0, kk, block):
-                    s1 = min(s0 + block, kk)
-                    S = block_scores(
-                        vecs[s0:s1], vecs, norms[s0:s1], norms
-                    )
-                    for bi in range(s1 - s0):
-                        si = s0 + bi
-                        row = S[bi]
-                        # NaN orders LARGEST (Spark DESC semantics)
-                        key = np.where(np.isnan(row), np.inf, row)
-                        order = np.lexsort((ids, -key))
-                        rank = 0
-                        for ci in order:
-                            if ci == si:
-                                continue
-                            rank += 1
-                            if rank > k:
-                                break
-                            out["src_id"].append(ids[si])
-                            out["nbr_id"].append(ids[ci])
-                            out["score"].append(row[ci])
-                            out["rank"].append(rank)
-            yield pd.DataFrame(out)
+        # NaN orders LARGEST (Spark DESC semantics)
+        key = np.where(np.isnan(row), np.inf, row)
+        rank = 0
+        for ci in np.lexsort((ids, -key)):
+            if ci == si:
+                continue
+            rank += 1
+            if rank > k:
+                break
+            out["src_id"].append(ids[si])
+            out["nbr_id"].append(ids[ci])
+            out["score"].append(row[ci])
+            out["rank"].append(rank)
 
-    return cells.mapInPandas(
-        _cell_topk, schema="src_id long, nbr_id long, score double, rank long"
+    return _score_within_cells(
+        assigned, id_col, vec_col,
+        "src_id long, nbr_id long, score double, rank long", _emit_topk,
     )
 
 
@@ -881,9 +877,9 @@ def threshold_pairs_within_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Within-cell exact cosine-threshold pairs (id_a < id_b) — the
-    SemDeDup pair scorer as one groupBy plus the same vectorized
-    Arrow/NumPy batch evaluator as :func:`knn_graph_within_cells`
-    (identical bit-exactness and bounded-cell arguments; emitted rows
+    SemDeDup pair scorer on the same kernel as
+    :func:`knn_graph_within_cells` (:func:`_score_within_cells`:
+    identical bit-exactness and bounded-cell arguments; emitted rows
     are only the QUALIFYING pairs, never the K² candidate stream).
     Returns (id_a, id_b, cell_id, score) with score >= threshold,
     scores bit-identical to the hoisted-norm JVM fold.
@@ -894,48 +890,21 @@ def threshold_pairs_within_cells(
     keep them; and a NaN that did reach a row would cross pandas ->
     Arrow as NULL.  The oracle replays this output unchanged only on
     inputs with no zero-norm vector."""
-    cells = assigned.select(
-        F.col("cell_id"),
-        F.struct(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")).alias(
-            "_mem"
-        ),
-    ).groupBy("cell_id").agg(F.collect_list("_mem").alias("_m"))
     thr = float(threshold)
-    members_sorted, block_scores, cell_norms = _cell_scorer_helpers()
-    chunk = _CELL_SCORE_CHUNK_DOUBLES
 
-    def _cell_pairs(batches):
+    def _emit_pairs(out, cell_id, ids, si, row):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            out = {"id_a": [], "id_b": [], "cell_id": [], "score": []}
-            for cell_id, mem in zip(pdf["cell_id"], pdf["_m"]):
-                ids, vecs = members_sorted(mem)
-                kk = len(ids)
-                if kk < 2:
-                    continue
-                norms = cell_norms(vecs)
-                block = max(1, chunk // kk)
-                for s0 in range(0, kk, block):
-                    s1 = min(s0 + block, kk)
-                    S = block_scores(
-                        vecs[s0:s1], vecs, norms[s0:s1], norms
-                    )
-                    for bi in range(s1 - s0):
-                        si = s0 + bi
-                        row = S[bi]
-                        # ids sorted asc: indices > si are exactly id_b > id_a
-                        hits = np.nonzero(row[si + 1 :] >= thr)[0] + si + 1
-                        for ci in hits:
-                            out["id_a"].append(ids[si])
-                            out["id_b"].append(ids[ci])
-                            out["cell_id"].append(cell_id)
-                            out["score"].append(row[ci])
-            yield pd.DataFrame(out)
+        # ids sorted asc: indices > si are exactly id_b > id_a
+        for ci in np.nonzero(row[si + 1 :] >= thr)[0] + si + 1:
+            out["id_a"].append(ids[si])
+            out["id_b"].append(ids[ci])
+            out["cell_id"].append(cell_id)
+            out["score"].append(row[ci])
 
-    return cells.mapInPandas(
-        _cell_pairs, schema="id_a long, id_b long, cell_id long, score double"
+    return _score_within_cells(
+        assigned, id_col, vec_col,
+        "id_a long, id_b long, cell_id long, score double", _emit_pairs,
     )
 
 
@@ -970,21 +939,6 @@ def _rp_planes(n_planes: int, dim: int) -> list[list[float]]:
     return [[rng.choice((-1.0, 1.0)) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def rp_code(vec_col, planes: list[list[float]]):
-    """Sign-random-projection code: bit j set iff dot(vec, plane_j) > 0.
-    One JVM-side fold per plane over a literal ±1 array — no UDF."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    code = F.lit(0)
-    for j, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(w) for w in plane]), lambda x, w: x * w),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        code = code + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return code
-
-
 def rp_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1004,18 +958,27 @@ def rp_lsh_topk(
     probing covers the dominant miss mode at (n_planes+1)/2^n_planes of
     the corpus scored per query.  The candidate join is an equi-join on
     the bucket code (never a cross join), same scale shape as the LSH
-    text-dedup band join."""
-    planes = _rp_planes(n_planes, dim)
-    coded = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        rp_code(vec_col, planes).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        rp_code(vec_col, planes).alias("code"),
-    )
+    text-dedup band join.
+
+    The bucket is the one-band case of the banded sign code
+    (:func:`rp_dots` + :func:`rp_band_structs_from_dots`, the path
+    :func:`cosine_threshold_pairs_bucketed` uses): bit j set iff
+    dot(vec, plane_j) > 0, the dots in their own projection so the plane
+    fold runs once per row, not once per bit."""
+
+    def coded(df, id_alias, vec_alias, code_alias):
+        return df.select(
+            F.col(id_col).alias(id_alias),
+            F.col(vec_col).alias(vec_alias),
+            rp_dots(vec_col, n_planes, dim).alias("_dots"),
+        ).select(
+            id_alias,
+            vec_alias,
+            rp_band_structs_from_dots("_dots", 1, n_planes)[0].bv.alias(code_alias),
+        )
+
+    corpus_coded = coded(corpus, "neighbor_id", "c_vec", "bucket")
+    q = coded(queries, "query_id", "q_vec", "code")
     # multi-probe: own bucket + flip each bit once (Hamming-1)
     probes = F.array(
         F.col("code"), *[F.col("code").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)]
@@ -1023,7 +986,7 @@ def rp_lsh_topk(
     probed = q.select("query_id", "q_vec", F.explode(probes).alias("bucket"))
     scored = (
         F.broadcast(probed)
-        .join(coded, "bucket")
+        .join(corpus_coded, "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id", "neighbor_id", cosine_similarity("q_vec", "c_vec").alias("score")
@@ -1109,6 +1072,35 @@ def pq_encode(
     )
 
 
+def _adc_index(
+    corpus: DataFrame, n_codes: int, m: int, id_col: str, vec_col: str
+) -> tuple[str, int, str, str]:
+    """The PQ/ADC prelude shared by :func:`pq_adc_topk` and
+    :func:`ivfpq_topk`: probe the vector width, split it into ``m``
+    subspaces of ``sub`` dims, fit the codebook literal
+    (:func:`_pq_codebook_sql`), and build the two SQL folds.  Returns
+    ``(cb_sql, sub, lut_sql, score_sql)``: ``lut_sql`` turns a query's
+    ``_q`` (array<double>) into its flattened (m x n_codes) sub-dot
+    table, and ``score_sql`` sums ``lut[s][codes[s]]`` over the
+    subspaces into one ADC score."""
+    dim = _vector_dim(corpus, vec_col)
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
+    sub = dim // m
+    cb_sql = _pq_codebook_sql(corpus, n_codes, id_col, vec_col)
+    lut_sql = (
+        "flatten(transform(sequence(0, {m1}), s -> transform({cb}, cvec -> "
+        "aggregate(zip_with(slice(_q, s*{sub}+1, {sub}), slice(cvec, s*{sub}+1, {sub}),"
+        " (x, y) -> x * y), 0D, (acc, x) -> acc + x))))"
+    ).format(m1=m - 1, cb=cb_sql, sub=sub)
+    score_sql = (
+        f"aggregate(zip_with(codes, sequence(0, {m - 1}),"
+        f" (c, s) -> element_at(lut, s*{n_codes} + c + 1)),"
+        " 0D, (acc, x) -> acc + x)"
+    )
+    return cb_sql, sub, lut_sql, score_sql
+
+
 def pq_adc_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1137,27 +1129,14 @@ def pq_adc_topk(
     (queries/similarity.py) re-derives codebook, codes, LUTs, and ADC
     sums bit-identically (``list_sum``/``list_dot_product`` fold
     left-to-right in element order, verified empirically)."""
-    dim = _vector_dim(corpus, vec_col)
-    assert dim % m == 0, f"dim {dim} not divisible into {m} subspaces"
-    sub = dim // m
-    cb_sql = _pq_codebook_sql(corpus, n_codes, id_col, vec_col)
+    cb_sql, sub, lut, score = _adc_index(corpus, n_codes, m, id_col, vec_col)
     codes = pq_encode(corpus, cb_sql, m, sub, id_col, vec_col).withColumnRenamed(
         id_col, "neighbor_id"
     )
-    lut = (
-        "flatten(transform(sequence(0, {m1}), s -> transform({cb}, cvec -> "
-        "aggregate(zip_with(slice(_q, s*{sub}+1, {sub}), slice(cvec, s*{sub}+1, {sub}),"
-        " (x, y) -> x * y), 0D, (acc, x) -> acc + x))))"
-    ).format(m1=m - 1, cb=cb_sql, sub=sub)
     luts = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("_q"),
     ).select("query_id", F.expr(lut).alias("lut"))
-    score = (
-        f"aggregate(zip_with(codes, sequence(0, {m - 1}),"
-        f" (c, s) -> element_at(lut, s*{n_codes} + c + 1)),"
-        " 0D, (acc, x) -> acc + x)"
-    )
     scored = (
         codes.crossJoin(F.broadcast(luts))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -1194,21 +1173,13 @@ def ivfpq_topk(
     Same determinism guarantees as :func:`pq_adc_topk` /
     :func:`ivf_topk`, so the combined index — cells, assignments,
     codebook, codes, LUT sums, ranking — replays in SQL end to end."""
-    dim = _vector_dim(corpus, vec_col)
-    assert dim % m == 0, f"dim {dim} not divisible into {m} subspaces"
-    sub = dim // m
+    cb_sql, sub, lut, score = _adc_index(corpus, n_codes, m, id_col, vec_col)
     cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    cb_sql = _pq_codebook_sql(corpus, n_codes, id_col, vec_col)
     codes = pq_encode(
         assigned, cb_sql, m, sub, id_col, vec_col, extra_cols=("cell_id",)
     ).withColumnRenamed(id_col, "neighbor_id")
 
-    lut = (
-        "flatten(transform(sequence(0, {m1}), s -> transform({cb}, cvec -> "
-        "aggregate(zip_with(slice(_q, s*{sub}+1, {sub}), slice(cvec, s*{sub}+1, {sub}),"
-        " (x, y) -> x * y), 0D, (acc, x) -> acc + x))))"
-    ).format(m1=m - 1, cb=cb_sql, sub=sub)
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("_q"),
@@ -1224,12 +1195,6 @@ def ivfpq_topk(
         q_scored.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= nprobe)
         .select("query_id", "lut", "cell_id")
-    )
-
-    score = (
-        f"aggregate(zip_with(codes, sequence(0, {m - 1}),"
-        f" (c, s) -> element_at(lut, s*{n_codes} + c + 1)),"
-        " 0D, (acc, x) -> acc + x)"
     )
     scored = (
         F.broadcast(probed)

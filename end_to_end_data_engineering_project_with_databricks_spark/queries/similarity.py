@@ -93,6 +93,26 @@ def sim_threshold_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_threshold_pairs(e, threshold=0.35)
 
 
+def _rp_sign_sql(n_planes: int, dim: int = 64) -> list[str]:
+    """Per-plane sign bits of ``embeddings.embedding`` as DuckDB SQL: 1
+    iff its dot with plane j is > 0, else 0 — the replay of
+    operators/similarity.rp_dots + rp_band_structs_from_dots.  The ±1
+    planes are the deterministic module constants
+    (operators/similarity._rp_planes, seeded PRNG), inlined as literals,
+    and ``list_dot_product`` folds in the same element order as the
+    Spark-side ``zip_with``/``aggregate`` (functions/vectors.py), so
+    every sign decision is bit-reproducible."""
+    from end_to_end_data_engineering_project_with_databricks_spark.operators.similarity import (
+        _rp_planes,
+    )
+
+    return [
+        "(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
+        "[" + ",".join(f"{w:.1f}" for w in p) + "]) > 0 THEN 1 ELSE 0 END)"
+        for p in _rp_planes(n_planes, dim)
+    ]
+
+
 def _banded_lsh_oracle_sql(threshold: float, n_planes: int = 64, bands: int = 16) -> str:
     """DuckDB replay of the COMPLETE banded sign-LSH threshold join
     (cosine_threshold_pairs_bucketed): the ±1 planes are deterministic
@@ -103,17 +123,9 @@ def _banded_lsh_oracle_sql(threshold: float, n_planes: int = 64, bands: int = 16
     dots[b*rows+j] > 0) with the Spark side, and ``list_dot_product``
     folds in the same element order as the zip_with/aggregate fold, so
     every sign decision is bit-reproducible."""
-    from end_to_end_data_engineering_project_with_databricks_spark.operators.similarity import (
-        _rp_planes,
-    )
-
     rows = n_planes // bands
-    planes = _rp_planes(n_planes, 64)
     signs = ",\n             ".join(
-        "(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        "[" + ",".join(f"{w:.1f}" for w in p) + "]) > 0 THEN 1 ELSE 0 END)"
-        f" AS s{j}"
-        for j, p in enumerate(planes)
+        f"{sign} AS s{j}" for j, sign in enumerate(_rp_sign_sql(n_planes))
     )
     band_rows = "\n      UNION ALL ".join(
         f"SELECT vec_id, {b} AS band, ("
@@ -334,47 +346,41 @@ def sim_ivf_auto_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rp_topk_oracle_sql() -> str:
-    """DuckDB replay of the raw rp_lsh_topk neighbor lists: same coded/
-    multi-probe pipeline as the recall oracle (see _rp_oracle_sql), but
-    emitting the per-query (neighbor_id, score, rank) rows themselves."""
-    from end_to_end_data_engineering_project_with_databricks_spark.operators.similarity import (
-        _rp_planes,
-    )
-
-    planes = _rp_planes(8, 64)
-    code = " + ".join(
-        "(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        "[" + ",".join(f"{w:.1f}" for w in p) + "]) > 0 "
-        f"THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(planes)
-    )
-    probes = ", ".join(f"xor(bucket, {1 << j})" for j in range(8))
+def _rp_lsh_ctes(n_planes: int = 8) -> str:
+    """DuckDB replay of the COMPLETE rp_lsh_topk pipeline (VERDICT r4
+    item 2b), shared by the raw top-k and the recall oracles: sign codes
+    (:func:`_rp_sign_sql`, bit j weighted 2^j), Hamming-1 multi-probe,
+    bucket equi-join and exact cosine ranking, ending at
+    ``lsh(query_id, neighbor_id, score, rank)`` with rank <= 5 for the
+    ``vec_id < 8`` query batch."""
+    code = " + ".join(f"{1 << j} * {sign}" for j, sign in enumerate(_rp_sign_sql(n_planes)))
+    probes = ", ".join(f"xor(bucket, {1 << j})" for j in range(n_planes))
     cos_pc = sql_cosine("p.q_vec", "c.embedding")
     return f"""
-    WITH coded AS (
+    coded AS (
       SELECT vec_id, embedding, ({code}) AS bucket FROM embeddings
     ),
     probes AS (
       SELECT vec_id AS query_id, embedding AS q_vec,
              unnest([bucket, {probes}]) AS bucket
       FROM coded WHERE vec_id < 8
-    )
-    SELECT query_id, neighbor_id, score, rank FROM (
-      SELECT p.query_id, c.vec_id AS neighbor_id, {cos_pc} AS score,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY p.query_id
-               ORDER BY {cos_pc} DESC, c.vec_id
-             ) AS BIGINT) AS rank
-      FROM probes p JOIN coded c USING (bucket)
-      WHERE c.vec_id <> p.query_id
-    ) WHERE rank <= 5
-    """
+    ),
+    lsh AS (
+      SELECT query_id, neighbor_id, score, rank FROM (
+        SELECT p.query_id, c.vec_id AS neighbor_id, {cos_pc} AS score,
+               CAST(ROW_NUMBER() OVER (
+                 PARTITION BY p.query_id
+                 ORDER BY {cos_pc} DESC, c.vec_id
+               ) AS BIGINT) AS rank
+        FROM probes p JOIN coded c USING (bucket)
+        WHERE c.vec_id <> p.query_id
+      ) WHERE rank <= 5
+    )"""
 
 
 @query(
     "sim_rp_lsh_topk",
-    oracle=_rp_topk_oracle_sql(),
+    oracle=f"WITH {_rp_lsh_ctes()}\n    SELECT query_id, neighbor_id, score, rank FROM lsh",
     tags=("similarity", "topk", "approx", "lsh"),
 )
 def sim_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -700,47 +706,13 @@ def dedup_semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rp_oracle_sql() -> str:
-    """DuckDB replay of the COMPLETE rp_lsh_topk pipeline (VERDICT r4
-    item 2b).  The ±1 hyperplanes are deterministic module constants
-    (operators/similarity._rp_planes, seeded PRNG), so they inline as
-    SQL literals and the oracle re-derives every stage — sign codes,
-    Hamming-1 multi-probe, bucket equi-join, exact cosine ranking —
-    rather than just the exact baseline.  ``list_dot_product`` folds in
-    the same element order as the Spark-side ``zip_with``/``aggregate``
-    (functions/vectors.py), so the sign decisions are bit-reproducible."""
-    from end_to_end_data_engineering_project_with_databricks_spark.operators.similarity import (
-        _rp_planes,
-    )
-
-    planes = _rp_planes(8, 64)
-    code = " + ".join(
-        "(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), "
-        "[" + ",".join(f"{w:.1f}" for w in p) + "]) > 0 "
-        f"THEN {1 << j} ELSE 0 END)"
-        for j, p in enumerate(planes)
-    )
-    probes = ", ".join(f"xor(bucket, {1 << j})" for j in range(8))
-    cos_pc = sql_cosine("p.q_vec", "c.embedding")
+    """DuckDB replay of sim_rp_lsh_recall: the shared rp_lsh_topk chain
+    (:func:`_rp_lsh_ctes`) against the exact top-5, so the oracle
+    re-derives every stage — sign codes, Hamming-1 multi-probe, bucket
+    equi-join, exact cosine ranking — rather than just the exact
+    baseline."""
     return f"""
-    WITH coded AS (
-      SELECT vec_id, embedding, ({code}) AS bucket FROM embeddings
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, embedding AS q_vec,
-             unnest([bucket, {probes}]) AS bucket
-      FROM coded WHERE vec_id < 8
-    ),
-    lsh AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT p.query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY p.query_id
-                 ORDER BY {cos_pc} DESC, c.vec_id
-               ) AS rank
-        FROM probes p JOIN coded c USING (bucket)
-        WHERE c.vec_id <> p.query_id
-      ) WHERE rank <= 5
-    ),
+    WITH {_rp_lsh_ctes()},
     exact AS (
       SELECT query_id, neighbor_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,

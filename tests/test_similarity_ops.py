@@ -1,7 +1,9 @@
 """Property tests for similarity search: brute force must agree with a
 NumPy reference; IVF must be internally consistent (its result equals
 brute force restricted to the probed cells) and exact when probing every
-cell.
+cell; the Arrow/NumPy within-cell scorers must stay BIT-IDENTICAL to the
+JVM fold + join/window forms they replaced, and must run in a Python
+worker that cannot import this package.
 """
 
 from __future__ import annotations
@@ -10,13 +12,24 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from end_to_end_data_engineering_project_with_databricks_spark.functions.vectors import (
+    dot,
+    l2_norm,
+)
 from end_to_end_data_engineering_project_with_databricks_spark.operators.similarity import (
+    _topk_prereduce,
     brute_force_topk,
     deterministic_centroids,
+    ivf_assign,
     ivf_topk,
+    ivfpq_topk,
+    knn_graph_within_cells,
     lloyd_kmeans_fixed,
+    pq_adc_topk,
+    threshold_pairs_within_cells,
 )
 from end_to_end_data_engineering_project_with_databricks_spark.sources.readers import (
     load_table,
@@ -146,7 +159,6 @@ def test_rp_lsh_equals_bruteforce_on_probed_buckets(spark, sf_dir):
     from end_to_end_data_engineering_project_with_databricks_spark.operators.similarity import (
         _rp_planes,
         brute_force_topk,
-        rp_code,
         rp_lsh_topk,
     )
     from end_to_end_data_engineering_project_with_databricks_spark.sources.readers import (
@@ -162,7 +174,20 @@ def test_rp_lsh_equals_bruteforce_on_probed_buckets(spark, sf_dir):
     # mechanism: per query, result == exact ranking restricted to vectors
     # whose code is within Hamming distance 1 of the query's code
     planes = _rp_planes(8, 64)
-    coded = {r.vec_id: r.code for r in e.select("vec_id", rp_code("embedding", planes).alias("code")).collect()}
+
+    def ref_code(vec):
+        """Bit j set iff the strict left-to-right float sum of
+        vec * plane_j is > 0 (the JVM fold's order)."""
+        code = 0
+        for j, plane in enumerate(planes):
+            acc = 0.0
+            for x, w in zip(vec, plane):
+                acc += x * w
+            if acc > 0:
+                code |= 1 << j
+        return code
+
+    coded = {r.vec_id: ref_code(r.embedding) for r in e.select("vec_id", "embedding").collect()}
     exact = brute_force_topk(e, queries, k=10_000)
     by_q = {}
     for r in exact.collect():
@@ -267,6 +292,18 @@ def test_pq_encode_and_adc_match_numpy(spark, emb):
             assert abs(gscore - scores[nid]) < 1e-9
     # self never appears
     assert all(r.query_id != r.neighbor_id for r in out)
+
+
+@pytest.mark.parametrize("scorer", [pq_adc_topk, ivfpq_topk], ids=["pq_adc", "ivfpq"])
+def test_adc_rejects_dim_not_divisible_into_subspaces(spark, scorer):
+    """6-wide vectors cannot split into m=4 subspaces: a ValueError,
+    not an assert that ``python -O`` would strip."""
+    df = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(6)]) for i in range(4)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="dim 6 not divisible into 4 subspaces"):
+        scorer(df, df, m=4)
 
 
 @pytest.mark.parametrize(
@@ -634,3 +671,224 @@ def test_rerank_recall_dominates_adc(spark, sf_dir):
         r_adc = len(adc.get(qid, set()) & true_nb)
         r_rer = len(rer.get(qid, set()) & true_nb)
         assert r_rer >= r_adc, (qid, r_rer, r_adc)
+
+
+# ---------------------------------------------------------------------------
+# Within-cell scoring kernel (operators/similarity._score_within_cells):
+# knn_graph_within_cells and threshold_pairs_within_cells must stay
+# BIT-IDENTICAL to the JVM fold + join/window forms they replaced —
+# including the (score DESC, id ASC) tie-break and Spark's NaN-largest
+# DESC ordering — on the fixture and on degenerate cells.
+# ---------------------------------------------------------------------------
+
+
+def _assigned(spark, sf_dir):
+    e = load_table(spark, sf_dir, "embeddings")
+    return ivf_assign(e, deterministic_centroids(e, 16))
+
+
+#: Hand-built cell layouts over 7 random 4-d vectors (vec_id = index).
+_CELL_LAYOUTS = {
+    "empty": [],
+    "singletons": [0, 1, 2, 3, 4, 5, 6],
+    "k_ge_cell": [0, 0, 1, 1, 1, 2, 2],  # cells of 2-3 members, k=3
+    "zero_norm": [0, 0, 0, 0, 1, 1, 1],  # vec 0 is the zero vector
+}
+
+
+def _cell_case(spark, sf_dir, case):
+    """(assigned, the rows the join-form reference may score): the
+    reference leaves out the zero vector, whose 0/0 cosines the JVM
+    join form cannot divide (ANSI DIVIDE_BY_ZERO)."""
+    if case == "fixture":
+        a = _assigned(spark, sf_dir)
+        return a, a
+    cells = _CELL_LAYOUTS[case]
+    vecs = np.random.default_rng(5).standard_normal((len(cells), 4)).astype(np.float32)
+    if case == "zero_norm":
+        vecs[0] = 0.0
+    a = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]], c) for i, c in enumerate(cells)],
+        "vec_id long, embedding array<float>, cell_id long",
+    )
+    return a, a.filter(F.col("vec_id") != 0) if case == "zero_norm" else a
+
+
+def _knn_join_reference(assigned, k=3):
+    """The pre-r14 join + window formulation (hoisted norms)."""
+    a = assigned.select(
+        F.col("vec_id").alias("src_id"),
+        F.col("embedding").alias("src_vec"),
+        l2_norm("embedding").alias("_sn"),
+        "cell_id",
+    )
+    b = assigned.select(
+        F.col("vec_id").alias("nbr_id"),
+        F.col("embedding").alias("nbr_vec"),
+        l2_norm("embedding").alias("_nn"),
+        "cell_id",
+    )
+    scored = (
+        a.join(b, "cell_id")
+        .filter(F.col("src_id") != F.col("nbr_id"))
+        .select(
+            "src_id",
+            "nbr_id",
+            (dot("src_vec", "nbr_vec") / (F.col("_sn") * F.col("_nn"))).alias("score"),
+        )
+    )
+    w = Window.partitionBy("src_id").orderBy(F.desc("score"), F.asc("nbr_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+@pytest.mark.parametrize("case", ["fixture", "empty", "singletons", "k_ge_cell"])
+def test_knn_cell_scorer_bit_identical_to_join_window(spark, sf_dir, case):
+    assigned, _ = _cell_case(spark, sf_dir, case)
+    got = sorted(map(tuple, knn_graph_within_cells(assigned, k=3).collect()))
+    ref = sorted(map(tuple, _knn_join_reference(assigned, k=3).collect()))
+    assert got == ref  # including exact float64 score bits
+
+
+@pytest.mark.parametrize(
+    "case", ["fixture", "empty", "singletons", "k_ge_cell", "zero_norm"]
+)
+def test_threshold_cell_scorer_bit_identical_to_join(spark, sf_dir, case):
+    """A zero-norm vector's pairs score NaN and are not emitted, so the
+    scorer equals the join form over the other rows."""
+    assigned, ref_rows = _cell_case(spark, sf_dir, case)
+    a = ref_rows.select(
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("vec_a"),
+        l2_norm("embedding").alias("_na"),
+        "cell_id",
+    )
+    b = ref_rows.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vec_b"),
+        l2_norm("embedding").alias("_nb"),
+        "cell_id",
+    )
+    ref = sorted(
+        map(
+            tuple,
+            a.join(b, "cell_id")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select(
+                "id_a",
+                "id_b",
+                "cell_id",
+                (dot("vec_a", "vec_b") / (F.col("_na") * F.col("_nb"))).alias("score"),
+            )
+            .filter(F.col("score") >= 0.35)
+            .collect(),
+        )
+    )
+    got = sorted(
+        map(tuple, threshold_pairs_within_cells(assigned, threshold=0.35).collect())
+    )
+    assert got == ref
+
+
+def test_cell_scorer_nan_orders_largest_like_spark_desc(spark):
+    """A zero-norm vector makes every cosine against it 0/0 = NaN.  The
+    pre-r14 JVM join form CRASHED on such inputs (ANSI DIVIDE_BY_ZERO —
+    it never reached an ordering decision), while DuckDB's IEEE
+    division yields NaN; the NumPy scorer follows the IEEE/oracle
+    semantics and must order NaN LARGEST (Spark's DESC convention, via
+    np.where(isnan, inf) before the lexsort) so that degenerate scores
+    rank deterministically."""
+    rows = [
+        (0, [0.0] * 4, 7),
+        (1, [1.0, 0.0, 0.0, 0.0], 7),
+        (2, [0.9, 0.1, 0.0, 0.0], 7),
+        (3, [0.0, 1.0, 0.0, 0.0], 7),
+    ]
+    assigned = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, cell_id long"
+    )
+    got = knn_graph_within_cells(assigned, k=2).collect()
+    by_src = {}
+    for r in got:
+        by_src.setdefault(r.src_id, {})[r.rank] = r
+    # every non-degenerate source ranks its NaN partner first
+    for src, ranks in by_src.items():
+        assert sorted(ranks) == list(range(1, len(ranks) + 1))
+        if src != 0:
+            # NaN is ranked first; pandas->Arrow emits the NaN double
+            # as NULL (pandas' float null sentinel), which only arises
+            # on inputs the old form could not process at all
+            assert ranks[1].nbr_id == 0 and ranks[1].score is None, ranks[1]
+    # the zero vector's own scores are all NaN; ties broken by id asc
+    assert [by_src[0][k].nbr_id for k in (1, 2)] == [1, 2]
+
+
+#: Runs in an isolated interpreter (``-I``, cwd = an empty directory):
+#: the package must not be importable there, as on the workers of a
+#: driver that put it on sys.path by hand.
+_WORKER = """
+import importlib.util, pickle, sys
+assert importlib.util.find_spec("end_to_end_data_engineering_project_with_databricks_spark") is None
+fn, batch = pickle.loads(sys.stdin.buffer.read())
+sys.stdout.buffer.write(pickle.dumps([o.to_dict("list") for o in fn(iter([batch]))]))
+"""
+
+
+def test_map_in_pandas_functions_run_without_the_package(spark, monkeypatch, tmp_path):
+    """Every function the cell scorers and the top-k pre-reduction pass
+    to ``mapInPandas`` unpickles and runs where this package cannot be
+    imported, and gives the in-process result there.  No Spark job
+    runs: the functions are captured while the plans are built."""
+    import pickle
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    vecs = [[1.0, 0.0, 0.5], [0.9, 0.1, 0.4], [0.0, 1.0, 0.2], [0.8, 0.3, 0.6]]
+    assigned = spark.createDataFrame(
+        [(i, v, 7) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>, cell_id long",
+    )
+    scored = spark.createDataFrame(
+        [(0, 1, 0.5)], "query_id long, neighbor_id long, score double"
+    )
+    captured = []
+    cls = type(assigned)
+    orig = cls.mapInPandas
+
+    def record(self, func, schema, *args, **kwargs):
+        captured.append(func)
+        return orig(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", record)
+    knn_graph_within_cells(assigned, k=2)
+    threshold_pairs_within_cells(assigned, threshold=0.5)
+    _topk_prereduce(scored, 2)
+    assert len(captured) == 3
+
+    # one cell, members in reverse id order (the kernel id-sorts them)
+    cell = pd.DataFrame(
+        {
+            "cell_id": [7],
+            "_m": [[{"vec_id": i, "embedding": vecs[i]} for i in (3, 2, 1, 0)]],
+        }
+    )
+    topk = pd.DataFrame(
+        {"query_id": [0, 0, 0, 1], "neighbor_id": [1, 2, 3, 0], "score": [0.2, 0.9, 0.5, 0.1]}
+    )
+    for fn, batch in zip(captured, (cell, cell, topk)):
+        here = [o.to_dict("list") for o in fn(iter([batch.copy()]))]
+        assert here and len(next(iter(here[0].values()))) > 0, here
+        run = subprocess.run(
+            [sys.executable, "-I", "-c", _WORKER],
+            input=cloudpickle.dumps((fn, batch)),
+            cwd=tmp_path,
+            capture_output=True,
+            timeout=60,
+        )
+        assert run.returncode == 0, run.stderr.decode()
+        assert pickle.loads(run.stdout) == here
