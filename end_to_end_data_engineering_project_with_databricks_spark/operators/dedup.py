@@ -8,8 +8,11 @@ ladder (BASELINE.json north star):
 - near-dup: MinHash signatures + LSH banding (candidate generation in
   O(n·bands) instead of O(n²)) with exact Jaccard verification;
 - SimHash: 64-bit rotation-tolerant fingerprint + banded Hamming join;
-- n-gram Jaccard: exact pairwise similarity on shingle sets (the oracle
-  for the approximate paths, and usable directly on bounded subsets).
+- exact n-gram overlap: :func:`ngram_jaccard_pairs` and
+  :func:`ngram_containment_pairs`, two emitters on one shingle
+  inverted-index equi-join (the baseline the approximate paths are
+  measured against; quadratic on corpus-frequent grams, so callers run
+  it on bounded subsets).
 
 Everything is JVM-side (split/explode/md5-int/groupBy) — no Python UDFs.
 The hash family is the engine-portable md5-derived 60-bit integer of
@@ -335,6 +338,85 @@ def jaccard_verify(
     )
 
 
+def _ngram_overlap(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+) -> DataFrame:
+    """(id_a, id_b, inter, na, nb) for every unordered document pair
+    (id_a < id_b) sharing at least one distinct k-gram shingle:
+    ``inter`` = |sh(a) ∩ sh(b)|, ``na``/``nb`` the two set sizes.
+
+    The exact inverted index: explode :func:`shingles` (distinct per
+    document, so a repeated gram counts once; a NULL text or a document
+    shorter than ``shingle_k`` tokens explodes to nothing), self-equi-join
+    on the shingle, count per pair, then two equi-joins for the set
+    sizes.  No cross join, but each gram contributes occ*(occ-1)/2 join
+    rows, so a corpus-frequent gram is quadratic — the reason its
+    queries slice ``doc_id`` and the full-corpus paths band instead."""
+    sh = df.select(
+        F.col(id_col).alias("_id"),
+        F.explode(shingles(text_col, shingle_k)).alias("_sh"),
+    )
+    counts = sh.groupBy("_id").agg(F.count("*").alias("n"))
+    a = sh.select(F.col("_id").alias("id_a"), "_sh")
+    b = sh.select(F.col("_id").alias("id_b"), "_sh")
+    return (
+        a.join(b, "_sh")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+        .join(counts.withColumnsRenamed({"_id": "id_a", "n": "na"}), "id_a")
+        .join(counts.withColumnsRenamed({"_id": "id_b", "n": "nb"}), "id_b")
+    )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int = 3,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """Exact k-gram Jaccard pairs: (id_a, id_b, jaccard) with id_a < id_b
+    and ``jaccard = inter / (na + nb - inter) >= threshold`` over
+    :func:`_ngram_overlap` — one IEEE division, bit-equal to the DuckDB
+    replay.  Pairs sharing no shingle never exist as rows."""
+    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
+    return (
+        _ngram_overlap(df, id_col, text_col, shingle_k)
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def ngram_containment_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int = 3,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """Exact directed k-gram containment: (id_small, id_big, containment)
+    with ``containment = |sh(small) ∩ sh(big)| / |sh(small)| >=
+    threshold``.  Each undirected overlap of :func:`_ngram_overlap` is
+    scored both ways (``inter/na`` and ``inter/nb``) — the shape of
+    :func:`containment_lsh_pairs` — so a mutual pair yields two rows."""
+    ov = _ngram_overlap(df, id_col, text_col, shingle_k)
+    directed = ov.select(
+        F.col("id_a").alias("id_small"),
+        F.col("id_b").alias("id_big"),
+        (F.col("inter").cast("double") / F.col("na").cast("double")).alias("containment"),
+    ).unionByName(
+        ov.select(
+            F.col("id_b").alias("id_small"),
+            F.col("id_a").alias("id_big"),
+            (F.col("inter").cast("double") / F.col("nb").cast("double")).alias(
+                "containment"
+            ),
+        )
+    )
+    return directed.filter(F.col("containment") >= threshold)
+
+
 def _candidate_docs(
     df: DataFrame, pairs: DataFrame, id_col: str, a: str = "id_a", b: str = "id_b"
 ) -> DataFrame:
@@ -419,9 +501,9 @@ def containment_lsh_pairs(
     fix is containment-calibrated banding (LSH Ensemble, Zhu et al.
     VLDB'16 — partition by set size, tune bands per partition) or
     asymmetric extensions of minwise hashing; the query-side test
-    (tests/test_round9_ops.py) measures the banded path's recall
-    against the exact operator on the fixtures so the trade is a
-    number, not a guess.
+    (tests/test_dedup_ops.py) measures the banded path's recall
+    against the exact :func:`ngram_containment_pairs` on the fixtures
+    so the trade is a number, not a guess.
 
     Plan shape: the signature/banding pipeline is minhash_lsh_dedup's
     (candidates localCheckpointed once, corpus semi-filtered to
@@ -486,7 +568,7 @@ def ensemble_schemes(num_hashes: int = 64) -> tuple[tuple[int, int], ...]:
     the same ``num_hashes`` signature while moving the S-curve threshold
     (1/b)^(1/r) down a notch per stratum — at H=64 the thresholds read
     ~0.50 / 0.18 / 0.016, the fixture-validated ladder (recall tests in
-    tests/test_round9_ops.py).  The ladder is the FIXED half of the
+    tests/test_dedup_ops.py).  The ladder is the FIXED half of the
     strata; the size BOUNDS are corpus-derived (auto_ensemble_strata)."""
     if num_hashes < 4 or num_hashes % 4:
         raise ValueError(f"num_hashes must be a multiple of 4, got {num_hashes}")

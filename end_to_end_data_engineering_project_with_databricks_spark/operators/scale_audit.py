@@ -581,34 +581,23 @@ def containment_growth_stats(
     generation to the MinHash band join and keep containment as the
     verify.  The audit measures both the growth exponent AND the max
     shingle occupancy (the hazard's size on this corpus); replica
-    tagging keeps frequent shingles replica-local, hub grams excepted."""
+    tagging keeps frequent shingles replica-local, hub grams excepted.
+    ``verified_pairs`` counts the production operator's output
+    (operators/dedup.ngram_containment_pairs)."""
     from end_to_end_data_engineering_project_with_databricks_spark.operators.dedup import (
+        ngram_containment_pairs,
         shingles,
     )
 
-    sh = scale_out(docs).select(
-        F.col(id_col).alias("_id_"), F.explode(shingles(text_col, shingle_k)).alias("sh")
-    )
+    sh = scale_out(docs).select(F.explode(shingles(text_col, shingle_k)).alias("sh"))
     occ = sh.groupBy("sh").agg(F.count("*").alias("occ"))
     row = occ.agg(
         F.max("occ").alias("max_occ"),
         F.sum(F.col("occ") * (F.col("occ") - 1) / 2).alias("join_rows"),
     ).collect()[0]
-    counts = sh.groupBy("_id_").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("_id_").alias("id_small"), "sh")
-    b = sh.select(F.col("_id_").alias("id_big"), "sh")
-    verified = (
-        a.join(b, "sh")
-        .filter(F.col("id_small") != F.col("id_big"))
-        .groupBy("id_small", "id_big")
-        .agg(F.count("*").alias("novl"))
-        .join(counts.withColumnRenamed("_id_", "id_small"), "id_small")
-        .filter(
-            F.col("novl").cast("double") / F.col("n").cast("double")
-            >= float(threshold)
-        )
-        .count()
-    )
+    verified = ngram_containment_pairs(
+        docs, id_col, text_col, shingle_k, threshold
+    ).count()
     return {
         "n_docs": docs.count(),
         "max_shingle_occ": int(row["max_occ"] or 0),

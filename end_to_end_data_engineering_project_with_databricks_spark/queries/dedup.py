@@ -32,6 +32,8 @@ from end_to_end_data_engineering_project_with_databricks_spark.operators.dedup i
     connected_components,
     exact_dedup,
     minhash_lsh_dedup,
+    ngram_containment_pairs,
+    ngram_jaccard_pairs,
     shingles,
     simhash_near_dups,
 )
@@ -49,33 +51,109 @@ from end_to_end_data_engineering_project_with_databricks_spark.sources.readers i
 # hashing, banding, or verification flips the driver's value hash.
 # ---------------------------------------------------------------------------
 
-#: ``sh`` is MATERIALIZED: every replay references it 2-3 times (counts
-#: + both verify sides), and DuckDB 1.0 inlines CTEs per reference —
-#: without the hint the whole tokenize+unnest chain re-runs per
-#: reference (measured 3x the shingle work at 150k docs).  ``pos`` stays
-#: inline on purpose: its rows carry the full ``toks`` array, so
-#: materializing it would write docs x positions x |tokens| to the
-#: oracle's spill disk — the exact blow-up the r11 30x replay died on.
-#: tokenize/position prefix shared by the string-shingle CTE and the
-#: hash-only replays (the r13 ensemble family reads ``hs`` exclusively
-#: and skips the string-gram build entirely).
-_TOKEN_CTES = """
-    docs AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+def _token_ctes(docs_where: str = "") -> str:
+    """Tokenize/position prefix: ``docs`` (every row the predicate
+    keeps, short documents included), ``eligible`` (>= 3 tokens) and
+    ``pos`` (one row per 3-gram start).  Shared by the string-shingle
+    chain and the hash-only replays (the r13 ensemble family reads
+    ``hs`` exclusively and skips the string-gram build entirely)."""
+    where = f" WHERE {docs_where}" if docs_where else ""
+    return f"""
+    docs AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents{where}),
     eligible AS (SELECT doc_id, toks FROM docs WHERE len(toks) >= 3),
     pos AS (
       SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS i
       FROM eligible
     )"""
 
-_SHINGLE_CTES = (
-    _TOKEN_CTES
-    + """,
+
+def _shingle_ctes(docs_where: str = "") -> str:
+    """:func:`_token_ctes` plus ``sh(doc_id, shingle)``, the distinct
+    per-doc 3-gram strings of operators/dedup.shingles, over the
+    documents ``docs_where`` keeps (all of them when empty).
+
+    ``sh`` is MATERIALIZED: every replay references it 2-3 times (counts
+    + both join sides), and DuckDB 1.0 inlines CTEs per reference —
+    without the hint the whole tokenize+unnest chain re-runs per
+    reference (measured 3x the shingle work at 150k docs).  ``pos`` stays
+    inline on purpose: its rows carry the full ``toks`` array, so
+    materializing it would write docs x positions x |tokens| to the
+    oracle's spill disk — the exact blow-up the r11 30x replay died on.
+
+    The full-corpus text (:data:`_SHINGLE_CTES`) is what
+    tests/oracle.accelerated swaps for the pre-materialized corpus
+    shingles; a sliced chain differs in its ``docs`` line, so the
+    rewrite leaves it alone."""
+    return (
+        _token_ctes(docs_where)
+        + """,
     sh AS MATERIALIZED (
       SELECT DISTINCT doc_id,
              toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
       FROM pos
     )"""
-)
+    )
+
+
+_TOKEN_CTES = _token_ctes()
+_SHINGLE_CTES = _shingle_ctes()
+
+_COUNTS_CTE = "counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)"
+
+
+def _jaccard_sql(src: str, threshold: float) -> str:
+    """SELECT of the pairs of the overlap CTE ``src(id_a, id_b, inter)``
+    whose Jaccard ``inter / (na + nb - inter)`` (sizes from ``counts``)
+    reaches ``threshold`` — the single IEEE division the Spark emitters
+    use."""
+    return f"""SELECT p.id_a, p.id_b,
+           CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard
+    FROM {src} p
+    JOIN counts ca ON p.id_a = ca.doc_id
+    JOIN counts cb ON p.id_b = cb.doc_id
+    WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= {threshold}"""
+
+
+def _containment_sql(src: str, threshold: float) -> str:
+    """``directed`` CTE plus final SELECT: each undirected overlap of
+    ``src(id_a, id_b, inter)`` scored both ways (``inter/na`` as a in b,
+    ``inter/nb`` as b in a), kept at containment >= ``threshold``."""
+    return f"""
+    directed AS (
+      SELECT i.id_a AS id_small, i.id_b AS id_big,
+             CAST(i.inter AS DOUBLE) / ca.n AS containment
+      FROM {src} i JOIN counts ca ON i.id_a = ca.doc_id
+      UNION ALL
+      SELECT i.id_b, i.id_a, CAST(i.inter AS DOUBLE) / cb.n
+      FROM {src} i JOIN counts cb ON i.id_b = cb.doc_id
+    )
+    SELECT id_small, id_big, containment
+    FROM directed WHERE containment >= {threshold}
+    """
+
+
+def _exact_overlap_ctes(docs_where: str = "") -> str:
+    """DuckDB replay of operators/dedup._ngram_overlap: the shingle
+    chain, ``counts(doc_id, n)`` and ``pairs(id_a, id_b, inter)`` from
+    the one shingle self-equi-join (id_a < id_b)."""
+    return f"""{_shingle_ctes(docs_where)},
+    {_COUNTS_CTE},
+    pairs AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    )"""
+
+
+def _exact_jaccard_ctes(threshold: float, docs_where: str = "") -> str:
+    """The exact-pairs chain ending at ``jac(id_a, id_b, jaccard)``:
+    replay of operators/dedup.ngram_jaccard_pairs, the exact truth set
+    every Jaccard oracle below reads."""
+    return f"""{_exact_overlap_ctes(docs_where)},
+    jac AS (
+      {_jaccard_sql("pairs", threshold)}
+    )"""
+
 
 #: shingle-HASH CTE replaying operators/dedup._hashed_shingle_docs: one
 #: md5-60 per token position, positional SHINGLE_C combine mod P.
@@ -126,36 +204,46 @@ def _band_cte_sql(src: str, bands: int = 16, rows_per_band: int = 4) -> str:
     )
 
 
-def _lsh_verify_sql(threshold: float, pair_filter: str = "") -> str:
-    """Shared candidate-join + exact-Jaccard verify over a ``bands`` CTE
-    (plus the shingle CTEs).  ``pair_filter`` optionally restricts the
-    candidate pairs (the incremental query's increment-touching set)."""
-    return f"""
-    cand AS (
+def _cand_cte(pair_filter: str = "") -> str:
+    """Distinct band-sharing pairs of a ``bands`` CTE; ``pair_filter``
+    optionally restricts them (the incremental query's
+    increment-touching set)."""
+    return f"""cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM bands a
       JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
       {pair_filter}
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    )"""
+
+
+def _lsh_overlap_ctes(pair_filter: str = "") -> str:
+    """Candidate join plus exact shingle overlap over a ``bands`` CTE
+    (and the shingle CTEs): ``cand``, ``counts`` and
+    ``inter(id_a, id_b, inter)``, the verify input of every banded
+    replay."""
+    return f"""
+    {_cand_cte(pair_filter)},
+    {_COUNTS_CTE},
     inter AS (
       SELECT c.id_a, c.id_b, COUNT(*) AS inter
       FROM cand c
       JOIN sh x ON x.doc_id = c.id_a
       JOIN sh y ON y.doc_id = c.id_b AND y.shingle = x.shingle
       GROUP BY c.id_a, c.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           CAST(i.inter AS DOUBLE) / (ca.n + cb.n - i.inter) AS jaccard
-    FROM inter i
-    JOIN counts ca ON i.id_a = ca.doc_id
-    JOIN counts cb ON i.id_b = cb.doc_id
-    WHERE CAST(i.inter AS DOUBLE) / (ca.n + cb.n - i.inter) >= {threshold}"""
+    )"""
+
+
+def _lsh_verify_sql(threshold: float, pair_filter: str = "") -> str:
+    """Shared candidate-join + exact-Jaccard verify over a ``bands`` CTE
+    (plus the shingle CTEs)."""
+    return f"""{_lsh_overlap_ctes(pair_filter)}
+    {_jaccard_sql("inter", threshold)}"""
 
 
 def _sig_cte_sql() -> str:
     """The 64-permutation MinHash signature CTE over ``hs`` — shared by
-    the Jaccard replay and the containment-LSH replay.  MATERIALIZED:
+    every MinHash replay (Jaccard, containment, ensemble, recall
+    audit).  MATERIALIZED:
     the ensemble replay's three banding CTEs each reference it, and
     DuckDB 1.0 re-inlines (= recomputes) a plain CTE per reference."""
     sig_cols = ",\n             ".join(
@@ -168,16 +256,21 @@ def _sig_cte_sql() -> str:
     )"""
 
 
+#: ``hs`` -> ``sig`` -> 16x4 ``bands``: the minhash_lsh_dedup signature
+#: and banding chain, read after a chain that defines ``pos``.
+_MINHASH_BANDS_CTES = f"""{_HS_CTE},
+    {_sig_cte_sql()},
+    bands AS (
+      {_band_cte_sql('sig')}
+    )"""
+
+
 def _minhash_replay_sql(threshold: float, pair_filter: str = "") -> str:
     """Full DuckDB replay of minhash_lsh_dedup: 64 affine-permutation
     minima over the mod-P base hash, 16x4 banding, candidate equi-join,
     exact-Jaccard verify."""
     return f"""
-    WITH {_SHINGLE_CTES},{_HS_CTE},
-    {_sig_cte_sql()},
-    bands AS (
-      {_band_cte_sql('sig')}
-    ),{_lsh_verify_sql(threshold, pair_filter)}
+    WITH {_SHINGLE_CTES},{_MINHASH_BANDS_CTES},{_lsh_verify_sql(threshold, pair_filter)}
     """
 
 
@@ -186,35 +279,7 @@ def _containment_lsh_replay_sql(threshold: float = 0.8) -> str:
     the minhash_lsh_dedup signature+banding chain, then the ASYMMETRIC
     containment verify in both directions per unordered candidate."""
     return f"""
-    WITH {_SHINGLE_CTES},{_HS_CTE},
-    {_sig_cte_sql()},
-    bands AS (
-      {_band_cte_sql('sig')}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS novl
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.id_a
-      JOIN sh y ON y.doc_id = c.id_b AND y.shingle = x.shingle
-      GROUP BY c.id_a, c.id_b
-    ),
-    directed AS (
-      SELECT i.id_a AS id_small, i.id_b AS id_big,
-             CAST(i.novl AS DOUBLE) / ca.n AS containment
-      FROM inter i JOIN counts ca ON i.id_a = ca.doc_id
-      UNION ALL
-      SELECT i.id_b, i.id_a, CAST(i.novl AS DOUBLE) / cb.n
-      FROM inter i JOIN counts cb ON i.id_b = cb.doc_id
-    )
-    SELECT id_small, id_big, containment
-    FROM directed WHERE containment >= {threshold}
-    """
+    WITH {_SHINGLE_CTES},{_MINHASH_BANDS_CTES},{_lsh_overlap_ctes()},{_containment_sql("inter", threshold)}"""
 
 
 def _oph_replay_sql(threshold: float) -> str:
@@ -358,97 +423,29 @@ def dedup_cross_source_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ngram_jaccard",
-    oracle="""
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 200
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.id_a, p.id_b,
-           CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard
-    FROM pairs p
-    JOIN counts ca ON p.id_a = ca.doc_id
-    JOIN counts cb ON p.id_b = cb.doc_id
-    WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.05
+    oracle=f"""
+    WITH {_exact_jaccard_ctes(0.05, "doc_id < 200")}
+    SELECT id_a, id_b, jaccard FROM jac
     """,
     tags=("dedup", "join"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram (3-shingle) Jaccard similarity pairs on a bounded
-    subset: explode distinct shingles, self-equi-join on the shingle to
-    count intersections (never a cross join), derive |union| from the two
-    set sizes.  This is the exact baseline the MinHash path approximates;
+    subset (operators/dedup.ngram_jaccard_pairs): explode distinct
+    shingles, self-equi-join on the shingle to count intersections
+    (never a cross join), derive |union| from the two set sizes.  This
+    is the exact baseline the MinHash path approximates;
     the doc_id bound is the driver for demo purposes — at scale the same
     plan runs behind LSH candidate filtering."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sh = d.select(
-        F.col("doc_id"), F.explode(shingles("text", 3)).alias("shingle")
-    )
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        pairs.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.05)
-    )
+    return ngram_jaccard_pairs(d, "doc_id", "text", shingle_k=3, threshold=0.05)
 
 
 @query(
     "dedup_minhash_accuracy",
-    oracle="""
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 200
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.id_a, p.id_b,
-           CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard,
-           TRUE AS minhash_ok
-    FROM pairs p
-    JOIN counts ca ON p.id_a = ca.doc_id
-    JOIN counts cb ON p.id_b = cb.doc_id
-    WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.05
+    oracle=f"""
+    WITH {_exact_jaccard_ctes(0.05, "doc_id < 200")}
+    SELECT id_a, id_b, jaccard, TRUE AS minhash_ok FROM jac
     """,
     tags=("dedup", "approx", "accuracy"),
 )
@@ -469,25 +466,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sh = d.select(F.col("doc_id"), F.explode(shingles("text", 3)).alias("shingle"))
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    exact = (
-        pairs.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.05)
-    )
+    exact = ngram_jaccard_pairs(d, "doc_id", "text", shingle_k=3, threshold=0.05)
     sigs = minhash_signatures(d, "doc_id", "text", num_hashes=64, shingle_k=3)
     est = (
         F.expr(
@@ -510,32 +489,8 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_simhash_accuracy",
-    oracle="""
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 200
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    shc AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    jpairs AS (
-      SELECT id_a, id_b FROM (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) p
-      JOIN shc ca ON p.id_a = ca.doc_id
-      JOIN shc cb ON p.id_b = cb.doc_id
-      WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.05
-    ),
+    oracle=f"""
+    WITH {_exact_jaccard_ctes(0.05, "doc_id < 200")},
     tc AS (
       SELECT doc_id, t AS tok, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
@@ -551,7 +506,7 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT j.id_a, j.id_b,
            CAST(d.dp AS DOUBLE) / (sqrt(a.n2) * sqrt(b.n2)) AS cos_exact,
            TRUE AS simhash_ok
-    FROM jpairs j
+    FROM jac j
     JOIN dp d ON d.id_a = j.id_a AND d.id_b = j.id_b
     JOIN n2 a ON a.doc_id = j.id_a
     JOIN n2 b ON b.doc_id = j.id_b
@@ -582,23 +537,9 @@ def dedup_simhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sh = d.select(F.col("doc_id"), F.explode(shingles("text", 3)).alias("s"))
-    cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    jpairs = (
-        sh.alias("a")
-        .join(sh.alias("b"), "s")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-        .join(cnt.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na")), "id_a")
-        .join(cnt.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb")), "id_b")
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter"))
-            >= 0.05
-        )
-        .select("id_a", "id_b")
-    )
+    jpairs = ngram_jaccard_pairs(
+        d, "doc_id", "text", shingle_k=3, threshold=0.05
+    ).select("id_a", "id_b")
     tc = (
         d.select("doc_id", F.explode(tokens("text")).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -725,38 +666,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_connected_components",
-    oracle="""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 1000
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    edges AS (
-      SELECT p.id_a, p.id_b FROM p0 p
-      JOIN counts ca ON p.id_a = ca.doc_id
-      JOIN counts cb ON p.id_b = cb.doc_id
-      WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.02
-    ),
+#: Exact 3-gram Jaccard >= 0.02 edges over doc_id < 1000, symmetrized,
+#: closed by a recursive min-label reach: ``comp(doc_id, component)``,
+#: the replay of operators/dedup.connected_components over
+#: ngram_jaccard_pairs that both clustering queries run.
+_COMPONENTS_CTES = f"""{_exact_jaccard_ctes(0.02, "doc_id < 1000")},
     sym AS (
-      SELECT id_a AS src, id_b AS dst FROM edges
-      UNION ALL SELECT id_b, id_a FROM edges
+      SELECT id_a AS src, id_b AS dst FROM jac
+      UNION ALL SELECT id_b, id_a FROM jac
     ),
     reach(node, lbl) AS (
       SELECT DISTINCT src, src FROM sym
@@ -766,7 +683,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp AS (
       SELECT node AS doc_id, CAST(MIN(lbl) AS BIGINT) AS component
       FROM reach GROUP BY node
-    )
+    )"""
+
+
+@query(
+    "dedup_connected_components",
+    oracle=f"""
+    WITH RECURSIVE {_COMPONENTS_CTES}
     SELECT doc_id, component,
            CAST(COUNT(*) OVER (PARTITION BY component) AS BIGINT) AS cluster_size
     FROM comp
@@ -787,22 +710,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE computing the same closure — the one query pairing an
     iterative DataFrame algorithm with a recursive SQL oracle."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    sh = d.select("doc_id", F.explode(shingles("text", 3)).alias("shingle"))
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-        .join(counts.withColumnsRenamed({"doc_id": "id_a", "n": "na"}), "id_a")
-        .join(counts.withColumnsRenamed({"doc_id": "id_b", "n": "nb"}), "id_b")
-        .filter(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")) >= 0.02
-        )
-        .select("id_a", "id_b")
-    )
+    pairs = ngram_jaccard_pairs(
+        d, "doc_id", "text", shingle_k=3, threshold=0.02
+    ).select("id_a", "id_b")
     comp = connected_components(pairs).withColumnRenamed("node", "doc_id")
     from pyspark.sql.window import Window
 
@@ -814,46 +724,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_cluster_canonical",
-    oracle="""
-    WITH RECURSIVE docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 1000
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    p0 AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    edges AS (
-      SELECT p.id_a, p.id_b FROM p0 p
-      JOIN counts ca ON p.id_a = ca.doc_id
-      JOIN counts cb ON p.id_b = cb.doc_id
-      WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.02
-    ),
-    sym AS (
-      SELECT id_a AS src, id_b AS dst FROM edges
-      UNION ALL SELECT id_b, id_a FROM edges
-    ),
-    reach(node, lbl) AS (
-      SELECT DISTINCT src, src FROM sym
-      UNION
-      SELECT s.dst, r.lbl FROM reach r JOIN sym s ON s.src = r.node
-    ),
-    comp AS (
-      SELECT node AS doc_id, CAST(MIN(lbl) AS BIGINT) AS component
-      FROM reach GROUP BY node
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_COMPONENTS_CTES},
     member AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component, m.n_chars
       FROM docs d
@@ -886,22 +758,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    sh = d.select("doc_id", F.explode(shingles("text", 3)).alias("shingle"))
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-        .join(counts.withColumnsRenamed({"doc_id": "id_a", "n": "na"}), "id_a")
-        .join(counts.withColumnsRenamed({"doc_id": "id_b", "n": "nb"}), "id_b")
-        .filter(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")) >= 0.02
-        )
-        .select("id_a", "id_b")
-    )
+    pairs = ngram_jaccard_pairs(
+        d, "doc_id", "text", shingle_k=3, threshold=0.02
+    ).select("id_a", "id_b")
     comp = connected_components(pairs).withColumnRenamed("node", "doc_id")
     member = (
         d.select("doc_id", "n_chars")
@@ -920,32 +779,8 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_containment",
-    oracle="""
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 600
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_small, b.doc_id AS id_big, COUNT(*) AS novl
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id <> b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.id_small, i.id_big,
-           CAST(i.novl AS DOUBLE) / CAST(c.n AS DOUBLE) AS containment
-    FROM inter i JOIN counts c ON i.id_small = c.doc_id
-    WHERE CAST(i.novl AS DOUBLE) / CAST(c.n AS DOUBLE) >= 0.8
-    """,
+    oracle=f"""
+    WITH {_exact_overlap_ctes("doc_id < 600")},{_containment_sql("pairs", 0.8)}""",
     tags=("dedup", "containment", "curation"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,32 +790,17 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     even though their symmetric Jaccard is tiny.  Standard curation step
     for boilerplate chains and wholesale quoting.
 
-    Shape: identical equi-join-on-shingle candidate generation as the
-    Jaccard path (no cross join; the shingle join IS the candidate
-    generator), one hash agg for overlaps, one broadcast-sized join for
-    the denominators.  At 100 TB the shingle join is replaced by the
-    MinHash band join exactly as in minhash_lsh_dedup; containment
-    re-verifies on candidates only.  Single IEEE division keeps the
-    score bit-equal to the oracle."""
+    Shape: the same exact overlap relation as the Jaccard path
+    (operators/dedup.ngram_containment_pairs — no cross join; the
+    shingle equi-join IS the candidate generator): each UNDIRECTED pair
+    (id_a < id_b) is counted once, then scored in both directions,
+    ``inter/na`` as (a in b) and ``inter/nb`` as (b in a), so the join
+    carries half the rows a directed ``!=`` self-join would.  At 100 TB
+    the shingle join is replaced by the MinHash band join exactly as in
+    minhash_lsh_dedup; containment re-verifies on candidates only.
+    Single IEEE division keeps the score bit-equal to the oracle."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 600)
-    sh = d.select("doc_id", F.explode(shingles("text", 3)).alias("shingle"))
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_small"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_big"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_small") != F.col("id_big"))
-        .groupBy("id_small", "id_big")
-        .agg(F.count("*").alias("novl"))
-    )
-    scored = inter.join(
-        counts.withColumnsRenamed({"doc_id": "id_small"}), "id_small"
-    ).select(
-        "id_small",
-        "id_big",
-        (F.col("novl").cast("double") / F.col("n").cast("double")).alias("containment"),
-    )
-    return scored.filter(F.col("containment") >= 0.8)
+    return ngram_containment_pairs(d, "doc_id", "text", shingle_k=3, threshold=0.8)
 
 
 @query(
@@ -1002,7 +822,7 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall trade stated where it bites: banding recalls by Jaccard, so
     an extreme-size-ratio quote (high containment, low Jaccard) can be
     missed — LSH Ensemble-style size-partitioned banding is the
-    published fix; tests/test_round9_ops.py measures this path's recall
+    published fix; tests/test_dedup_ops.py measures this path's recall
     against the exact operator on the fixtures.  Full value-hash
     oracle: signatures, banding, candidates, and both directed verifies
     replay from the shared hash family."""
@@ -1128,7 +948,7 @@ def dedup_containment_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     is tuned to the Jaccard a containment-qualified pair has against
     sets THAT size (16x4 / 32x2 / 64x1 for small/medium/large), so the
     extreme-size-ratio quotes dedup_containment_lsh's single global
-    banding misses become recallable.  tests/test_round9_ops.py pins
+    banding misses become recallable.  tests/test_dedup_ops.py pins
     ensemble recall >= plain-LSH recall against the exact operator.
 
     Full value-hash oracle: signatures, all three banding schemes, the
@@ -1490,34 +1310,9 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_oph_accuracy",
-    oracle="""
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks
-      FROM documents WHERE doc_id < 200
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.id_a, p.id_b,
-           CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard,
-           TRUE AS oph_ok
-    FROM pairs p
-    JOIN counts ca ON p.id_a = ca.doc_id
-    JOIN counts cb ON p.id_b = cb.doc_id
-    WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.05
+    oracle=f"""
+    WITH {_exact_jaccard_ctes(0.05, "doc_id < 200")}
+    SELECT id_a, id_b, jaccard, TRUE AS oph_ok FROM jac
     """,
     tags=("dedup", "approx", "accuracy", "oph"),
 )
@@ -1541,25 +1336,7 @@ def dedup_oph_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    sh = d.select(F.col("doc_id"), F.explode(shingles("text", 3)).alias("shingle"))
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    ca = counts.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    exact = (
-        pairs.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.05)
-    )
+    exact = ngram_jaccard_pairs(d, "doc_id", "text", shingle_k=3, threshold=0.05)
     sigs = oph_signatures(d, "doc_id", "text", num_buckets=64, shingle_k=3)
     est = (
         F.expr(
@@ -1582,34 +1359,10 @@ def dedup_oph_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_incremental_equivalence",
-    oracle="""
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.id_a, p.id_b,
-           CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard,
-           TRUE AS in_both
-    FROM pairs p
-    JOIN counts ca ON p.id_a = ca.doc_id
-    JOIN counts cb ON p.id_b = cb.doc_id
-    WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.5
-      AND (p.id_a % 10 = 0 OR p.id_b % 10 = 0)
+    oracle=f"""
+    WITH {_exact_jaccard_ctes(0.5)}
+    SELECT id_a, id_b, jaccard, TRUE AS in_both FROM jac
+    WHERE id_a % 10 = 0 OR id_b % 10 = 0
     """,
     tags=("dedup", "lsh", "incremental", "equivalence"),
 )
@@ -1773,34 +1526,10 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the unfiltered answer value-for-value — the oracle does not (and
 #: must not) replay the prefix; any under-generation shows up as a
 #: missing row here.
-DEDUP_JACCARD_PREFIX_ORACLE = """
-    WITH docs AS (
-      SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-    ),
-    pos AS (
-      SELECT doc_id, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS shingle
-      FROM pos
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT p.id_a, p.id_b,
-           CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) AS jaccard
-    FROM pairs p
-    JOIN counts ca ON p.id_a = ca.doc_id
-    JOIN counts cb ON p.id_b = cb.doc_id
-    WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.5
+DEDUP_JACCARD_PREFIX_ORACLE = f"""
+    WITH {_exact_jaccard_ctes(0.5)}
+    SELECT id_a, id_b, jaccard FROM jac
 """
-
 
 @query(
     "dedup_jaccard_prefix",
@@ -1835,9 +1564,8 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 PROFILE_SOURCE_OVERLAP_ORACLE = f"""
     WITH docs AS (SELECT source, string_split(text, ' ') AS toks FROM documents),
     pos AS (
-      SELECT source, toks,
-             unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS i
-      FROM docs
+      SELECT source, toks, unnest(generate_series(1, len(toks) - 2)) AS i
+      FROM docs WHERE len(toks) >= 3
     ),
     hs AS (
       SELECT source,
@@ -1926,41 +1654,13 @@ def profile_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_recall_audit_oracle(threshold: float = 0.5) -> str:
-    sig_cols = ",\n             ".join(
-        f"MIN({minhash_perm_duck(i, 'h')}) AS s{i}" for i in range(64)
-    )
     return f"""
-    WITH {_SHINGLE_CTES},{_HS_CTE},
-    sig AS (
-      SELECT doc_id,
-             {sig_cols}
-      FROM hs GROUP BY doc_id
-    ),
-    bands AS (
-      {_band_cte_sql('sig')}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a
-      JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-    ),
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    truth AS (
-      SELECT p.id_a, p.id_b
-      FROM pairs p
-      JOIN counts ca ON p.id_a = ca.doc_id
-      JOIN counts cb ON p.id_b = cb.doc_id
-      WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= {threshold}
-    ),
+    WITH {_exact_jaccard_ctes(threshold)},{_MINHASH_BANDS_CTES},
+    {_cand_cte()},
     m AS (
       SELECT CASE WHEN t.id_a IS NOT NULL THEN 1 ELSE 0 END AS in_truth,
              CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS in_cand
-      FROM truth t
+      FROM jac t
       FULL JOIN cand c ON t.id_a = c.id_a AND t.id_b = c.id_b
     ),
     agg AS (
@@ -2056,23 +1756,10 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ML_TRUTH_ORACLE = f"""
-    WITH {_SHINGLE_CTES},
-    counts AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    truth AS (
-      SELECT p.id_a, p.id_b
-      FROM pairs p
-      JOIN counts ca ON p.id_a = ca.doc_id
-      JOIN counts cb ON p.id_b = cb.doc_id
-      WHERE CAST(p.inter AS DOUBLE) / (ca.n + cb.n - p.inter) >= 0.5
-    )
+    WITH {_exact_jaccard_ctes(0.5)}
     SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
            TRUE AS recall_ok, TRUE AS subset_ok, TRUE AS nonempty_ok
-    FROM truth
+    FROM jac
     """
 
 

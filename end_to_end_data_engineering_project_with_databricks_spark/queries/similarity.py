@@ -243,14 +243,9 @@ def ivf_replay_ctes(
     )"""
 
 
-def ivf_topk_oracle_sql(
-    corpus_where: str = "TRUE", query_where: str = "q.vec_id < 8"
-) -> str:
-    """Full :func:`operators.similarity.ivf_topk` replay — the shared
-    CTE chain plus the candidate top-5 projection."""
-    return f"""
-    {ivf_replay_ctes(corpus_where, query_where)}
-    SELECT query_id, neighbor_id, score, rank FROM (
+#: ivf_topk's candidate top-5 over ``probed``/``assigned`` of
+#: :func:`ivf_replay_ctes`.
+_IVF_TOP5_SQL = f"""SELECT query_id, neighbor_id, score, rank FROM (
       SELECT p.query_id, a.vec_id AS neighbor_id, {_COS_P_A} AS score,
              CAST(ROW_NUMBER() OVER (
                PARTITION BY p.query_id
@@ -258,11 +253,43 @@ def ivf_topk_oracle_sql(
              ) AS BIGINT) AS rank
       FROM probed p JOIN assigned a USING (cell_id)
       WHERE a.vec_id <> p.query_id
-    ) WHERE rank <= 5
+    ) WHERE rank <= 5"""
+
+
+def ivf_topk_oracle_sql(
+    corpus_where: str = "TRUE", query_where: str = "q.vec_id < 8"
+) -> str:
+    """Full :func:`operators.similarity.ivf_topk` replay — the shared
+    CTE chain plus the candidate top-5 projection."""
+    return f"""
+    {ivf_replay_ctes(corpus_where, query_where)}
+    {_IVF_TOP5_SQL}
     """
 
 
-_IVF_REPLAY_CTES = ivf_replay_ctes()
+def _recall_at_5_sql(approx: str) -> str:
+    """The exact brute-force top-5 of the 8 queries ``vec_id < 8`` as an
+    ``exact`` CTE, then per-query recall@5 of the approximate top-5 CTE
+    ``approx(query_id, neighbor_id)`` against it — the tail of every
+    ANN recall oracle (IVF, sign-LSH)."""
+    return f"""exact AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               ROW_NUMBER() OVER (
+                 PARTITION BY q.vec_id ORDER BY {_COS} DESC, c.vec_id
+               ) AS rank
+        FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
+        WHERE q.vec_id < 8
+      ) WHERE rank <= 5
+    )
+    SELECT e.query_id,
+           CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hits,
+           CAST(COUNT(a.neighbor_id) AS DOUBLE) / 5 AS recall_at_5
+    FROM exact e
+    LEFT JOIN {approx} a
+      ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+    GROUP BY e.query_id
+    """
 
 
 @query(
@@ -403,61 +430,9 @@ def sim_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_ivf_recall",
-    oracle=f"""
-    WITH cents AS (
-      SELECT vec_id AS cell_id, embedding AS centroid
-      FROM embeddings ORDER BY vec_id LIMIT 16
-    ),
-    assigned AS (
-      SELECT vec_id, embedding, cell_id FROM (
-        SELECT c.vec_id, c.embedding, ct.cell_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY c.vec_id
-                 ORDER BY {_COS_CENT} DESC, ct.cell_id
-               ) AS rn
-        FROM embeddings c CROSS JOIN cents ct
-      ) WHERE rn = 1
-    ),
-    probed AS (
-      SELECT query_id, q_vec, cell_id FROM (
-        SELECT q.vec_id AS query_id, q.embedding AS q_vec, ct.cell_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_COS_Q_CENT} DESC, ct.cell_id
-               ) AS rn
-        FROM embeddings q CROSS JOIN cents ct
-        WHERE q.vec_id < 8
-      ) WHERE rn <= 4
-    ),
-    ivf AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT p.query_id, a.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY p.query_id
-                 ORDER BY {_COS_P_A} DESC, a.vec_id
-               ) AS rank
-        FROM probed p JOIN assigned a USING (cell_id)
-        WHERE a.vec_id <> p.query_id
-      ) WHERE rank <= 5
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id ORDER BY {_COS} DESC, c.vec_id
-               ) AS rank
-        FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        WHERE q.vec_id < 8
-      ) WHERE rank <= 5
-    )
-    SELECT e.query_id,
-           CAST(COUNT(i.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(COUNT(i.neighbor_id) AS DOUBLE) / 5 AS recall_at_5
-    FROM exact e
-    LEFT JOIN ivf i
-      ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
+    oracle=f"""{ivf_replay_ctes()},
+    ivf AS ({_IVF_TOP5_SQL}),
+    {_recall_at_5_sql("ivf")}""",
     tags=("similarity", "topk", "recall"),
 )
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,25 +688,7 @@ def _rp_oracle_sql() -> str:
     baseline."""
     return f"""
     WITH {_rp_lsh_ctes()},
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY q.vec_id ORDER BY {_COS} DESC, c.vec_id
-               ) AS rank
-        FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
-        WHERE q.vec_id < 8
-      ) WHERE rank <= 5
-    )
-    SELECT e.query_id,
-           CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
-           CAST(COUNT(l.neighbor_id) AS DOUBLE) / 5 AS recall_at_5
-    FROM exact e
-    LEFT JOIN lsh l
-      ON l.query_id = e.query_id AND l.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """
-
+    {_recall_at_5_sql("lsh")}"""
 
 @query(
     "sim_rp_lsh_recall",

@@ -91,102 +91,3 @@ def test_hnsw_recall_audit_consistent_with_search(spark, sf_dir) -> None:
         assert n_exact == 5
         assert n_hits == len(truth[qid] & by_q[qid])
         assert recall_fp == (1_000_000 * n_hits) // 5
-
-
-def test_containment_lsh_recall_vs_exact(spark, sf_dir) -> None:
-    """The banded containment path must agree with the exact operator
-    where both run (the doc_id < 600 slice the exact query bounds
-    itself to): every banded pair is a true containment pair (the
-    verify is exact, so precision is 1 by construction — asserted
-    anyway), and recall on the fixtures is high because their
-    containment pairs are near-duplicates (high Jaccard).  The recall
-    floor is the documented trade: extreme-size-ratio quotes can be
-    missed by Jaccard-calibrated banding."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_project_with_databricks_spark.queries.registry import (
-        all_specs,
-    )
-
-    specs = all_specs()
-    exact = {
-        (r.id_small, r.id_big)
-        for r in specs["dedup_containment"].fn(spark, sf_dir).collect()
-    }
-    banded_df = specs["dedup_containment_lsh"].fn(spark, sf_dir)
-    banded_sub = {
-        (r.id_small, r.id_big)
-        for r in banded_df.filter(
-            (F.col("id_small") < 600) & (F.col("id_big") < 600)
-        ).collect()
-    }
-    # exactness of the verify: no banded pair outside the exact answer
-    assert banded_sub <= exact, banded_sub - exact
-    if exact:
-        recall = len(banded_sub) / len(exact)
-        assert recall >= 0.9, (recall, len(banded_sub), len(exact))
-
-
-def test_containment_ensemble_recalls_extreme_size_ratio(spark) -> None:
-    """The pair class that motivates LSH Ensemble: a 12-token document
-    quoted verbatim inside an ~90-token one has containment 1.0 but
-    Jaccard ~0.12 — the global 16x4 banding's candidate probability
-    there is ~16 * 0.12^4 ~ 0.003 (and deterministically zero on this
-    corpus), while the large stratum's 64x1 scheme fires with
-    probability ~1 - 0.88^64 ~ 1.  Plain LSH must MISS the planted
-    pair; the ensemble must find it with containment exactly 1.0."""
-    from end_to_end_data_engineering_project_with_databricks_spark.operators.dedup import (
-        containment_lsh_ensemble_pairs,
-        containment_lsh_pairs,
-    )
-
-    small = " ".join(f"tok{i}" for i in range(12))
-    big = small + " " + " ".join(f"filler{i}" for i in range(80))
-    decoys = [
-        (100 + j, " ".join(f"d{j}w{i}" for i in range(20))) for j in range(6)
-    ]
-    df = spark.createDataFrame(
-        [(1, small), (2, big)] + decoys, "doc_id long, text string"
-    )
-    plain = {
-        (r.id_small, r.id_big)
-        for r in containment_lsh_pairs(df, "doc_id", "text").collect()
-    }
-    ens = {
-        (r.id_small, r.id_big, r.containment)
-        for r in containment_lsh_ensemble_pairs(df, "doc_id", "text").collect()
-    }
-    assert (1, 2) not in plain  # the documented global-banding miss
-    assert (1, 2, 1.0) in ens
-
-
-def test_containment_ensemble_dominates_plain_on_fixtures(spark, sf_dir) -> None:
-    """On the registry corpus the ensemble must be exact-verified
-    (subset of the exact answer) and recall at least what the plain
-    banding recalls — strictly more whenever a low-Jaccard containment
-    pair exists."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_data_engineering_project_with_databricks_spark.queries.registry import (
-        all_specs,
-    )
-
-    specs = all_specs()
-    exact = {
-        (r.id_small, r.id_big)
-        for r in specs["dedup_containment"].fn(spark, sf_dir).collect()
-    }
-    sub = (F.col("id_small") < 600) & (F.col("id_big") < 600)
-    plain = {
-        (r.id_small, r.id_big)
-        for r in specs["dedup_containment_lsh"].fn(spark, sf_dir).filter(sub).collect()
-    }
-    ens = {
-        (r.id_small, r.id_big)
-        for r in specs["dedup_containment_ensemble"]
-        .fn(spark, sf_dir)
-        .filter(sub)
-        .collect()
-    }
-    assert ens <= exact, ens - exact
-    assert len(ens & exact) >= len(plain & exact)

@@ -600,3 +600,36 @@ def test_stock_sketch_state_is_bounded(doc_replicas) -> None:
         assert s["theta_bytes"] <= 2048, (k, s)
         assert s["topk_bytes"] <= 4096, (k, s)
         assert s["topk_tracked_top10"] >= 1, (k, s)
+
+
+def test_replicate_embeddings_beyond_dim(spark) -> None:
+    """k > dim (the 100x probe): replicas >= dim get the odd-coordinate
+    sign flip — ids stay distinct, norms exactly preserved, and the
+    flipped replica differs from its shift-only sibling."""
+    import math
+
+    from end_to_end_data_engineering_project_with_databricks_spark.operators.scale_audit import (
+        replicate_embeddings,
+    )
+
+    dim = 4
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0, 4.0]), (2, [0.5, -1.5, 2.5, -3.5])],
+        "vec_id long, embedding array<double>",
+    )
+    rep = replicate_embeddings(df, 6).collect()
+    assert len(rep) == 12 and len({r.vec_id for r in rep}) == 12
+    base_norm = {1: math.sqrt(30.0), 2: math.sqrt(21.0)}
+    for r in rep:
+        src = r.vec_id // 6
+        assert math.isclose(
+            math.sqrt(sum(x * x for x in r.embedding)), base_norm[src]
+        )
+    by_id = {r.vec_id: list(r.embedding) for r in rep}
+    # replica 4 = shift 0 + flip vs replica 0 = shift 0 unflipped
+    assert by_id[1 * 6 + 4] == [v * s for v, s in zip(by_id[6], [1, -1, 1, -1])]
+
+    import pytest
+
+    with pytest.raises(ValueError, match="exceeds 2\\*dim"):
+        replicate_embeddings(df, 9).collect()
