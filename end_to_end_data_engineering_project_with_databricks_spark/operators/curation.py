@@ -43,10 +43,17 @@ def shingles_all(text_col: Column | str, k: int) -> Column:
     :func:`operators.dedup.shingles`, which is set-valued): repetition
     statistics need duplicate grams preserved.  Same JVM-side build —
     ``transform`` over a position sequence, no explode until the caller
-    wants rows."""
+    wants rows.
+
+    A NULL text or one shorter than ``k`` tokens yields an EMPTY array,
+    the guard :func:`operators.dedup.shingles` carries: ``sequence(1, 0)``
+    is ``[1, 0]`` (Spark sequences step downward), and ``element_at``
+    at position 0 raises under ANSI, failing the whole job."""
     toks = tokens(text_col)
     n = F.size(toks)
-    pos = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
+    pos = F.when(
+        n >= F.lit(k), F.sequence(F.lit(1), n - (k - 1))
+    ).otherwise(F.array().cast("array<int>"))
     return F.transform(
         pos,
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)]),

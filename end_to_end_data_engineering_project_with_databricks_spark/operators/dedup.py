@@ -25,10 +25,11 @@ explode dominates; it is a narrow map (no shuffle) and the first groupBy
 (signature agg) is the only wide op per document.
 
 One path per step: every banded pipeline builds its band relation with
-:func:`lsh_band_buckets`, its candidate pairs plus the endpoint-filtered
-corpus with :func:`_banded_candidates`, and any verify filters the corpus
-to pair endpoints with :func:`_candidate_docs`.  Clustering
-(:func:`connected_components`) runs one Spark action per round.
+:func:`lsh_band_buckets`, its materialized candidate pairs with
+:func:`_banded_candidates`, and any verify filters the corpus to pair
+endpoints with :func:`_candidate_docs` (inside :func:`jaccard_verify`).
+Clustering (:func:`connected_components`) solves graphs whose quotient
+fits :data:`CC_DRIVER_BOUND` edges on the driver with no Spark round.
 
 Materialization caveat (ADVICE r6): operators whose signature/prefix
 relation feeds BOTH sides of a self-join materialize it with
@@ -48,8 +49,10 @@ single-process test/bench envelope where neither failure mode exists.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.storagelevel import StorageLevel
 
 from end_to_end_data_engineering_project_with_databricks_spark.functions.hashfamily import (
@@ -197,8 +200,10 @@ def minhash_signatures(
     Returns (id, sig: array<bigint>); documents with no shingles are
     dropped (they can't be near-dups of anything).
     """
-    # millions of hash evals from a few MB of text: widen tiny scans so
-    # the compute doesn't serialize on one split (no-op at scale)
+    # millions of hash evals from a few MB of text: _hashed_shingle_docs
+    # widens inputs whose byte estimate is below one split per core
+    # (scale_out), so the stage runs on every core even when a small
+    # one-row-group file puts all rows in one split (no-op at scale)
     hashed = _hashed_shingle_docs(df, id_col, text_col, shingle_k)
 
     # One SQL string instead of num_hashes unrolled py4j Columns: the
@@ -310,8 +315,12 @@ def jaccard_verify(
     threshold: float = 0.7,
 ) -> DataFrame:
     """Exact Jaccard on shingle sets for candidate pairs; keeps pairs with
-    similarity >= threshold.  Joins the (small) candidate set back to the
-    corpus twice — both joins are equi-joins on the id.
+    similarity >= threshold.  ``df`` is semi-filtered to the pairs'
+    endpoints (:func:`_candidate_docs`) and only those documents are
+    widened (:func:`scale_out`) and shingled; the (small) candidate set
+    then joins them twice — both joins are equi-joins on the id.  Callers
+    pass the whole corpus, and ``pairs`` is read twice (pair stream and
+    endpoint filter), so pass a materialized relation.
 
     STRING shingles on purpose: an A/B at sf0.1 (r6) replaced this with
     md5-60 HASHED shingle sets (int intersect instead of string
@@ -319,7 +328,7 @@ def jaccard_verify(
     steady state — because re-md5-ing every candidate document costs
     more than concat_ws + string intersects on the semi-filtered
     candidate set.  Don't retry without re-measuring."""
-    sets_df = scale_out(df).select(
+    sets_df = scale_out(_candidate_docs(df, pairs, id_col)).select(
         F.col(id_col).alias("_jid"), shingles(text_col, shingle_k).alias("_set")
     )
     a = sets_df.select(F.col("_jid").alias("id_a"), F.col("_set").alias("set_a"))
@@ -431,17 +440,14 @@ def _candidate_docs(
 
 
 def _banded_candidates(
-    df: DataFrame, sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
-) -> tuple[DataFrame, DataFrame]:
+    sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
+) -> DataFrame:
     """The candidate half of every banded LSH pipeline: the distinct
     band-sharing pairs of ``sigs``, materialized once (the verify
-    references them as the pair stream AND through the endpoint filter),
-    plus ``df`` semi-filtered to their endpoints.  Returns
-    ``(cands, cand_docs)``."""
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).localCheckpoint(
+    references them as the pair stream AND through the endpoint filter)."""
+    return lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).localCheckpoint(
         eager=True
     )
-    return cands, _candidate_docs(df, cands, id_col)
 
 
 def minhash_lsh_dedup(
@@ -466,10 +472,10 @@ def minhash_lsh_dedup(
     don't accumulate cached candidate sets) and the corpus is
     semi-filtered to candidate documents before verification, so the
     expensive shingle recomputation touches only docs that appear in
-    some pair, not the whole corpus twice (:func:`_banded_candidates`)."""
+    some pair, not the whole corpus twice (:func:`jaccard_verify`)."""
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    cands, cand_docs = _banded_candidates(df, sigs, id_col, bands, num_hashes // bands)
-    return jaccard_verify(cands, cand_docs, id_col, text_col, shingle_k, threshold)
+    cands = _banded_candidates(sigs, id_col, bands, num_hashes // bands)
+    return jaccard_verify(cands, df, id_col, text_col, shingle_k, threshold)
 
 
 def containment_lsh_pairs(
@@ -511,9 +517,9 @@ def containment_lsh_pairs(
     id-equi-joins against per-document sorted shingle arrays — cost
     O(candidates), never O(n^2)."""
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    cands, cand_docs = _banded_candidates(df, sigs, id_col, bands, num_hashes // bands)
+    cands = _banded_candidates(sigs, id_col, bands, num_hashes // bands)
     sets = (
-        scale_out(cand_docs)
+        scale_out(_candidate_docs(df, cands, id_col))
         .select(
             F.col(id_col).alias("_id_"),
             F.explode(shingles(text_col, shingle_k)).alias("sh"),
@@ -908,67 +914,117 @@ def containment_lsh_ensemble_pairs(
     )
 
 
+#: Quotient-graph edges :func:`connected_components` collects to the
+#: driver for its union-find finish (driver-memory arithmetic in
+#: docs/SCALE.md, "Connected-components driver bound").
+CC_DRIVER_BOUND = 1 << 18
+
+
+def _min_root_union_find(edges: list) -> dict:
+    """``{label: smallest label of its component}`` for every label on
+    ``edges`` whose root is not itself: union-find with path compression
+    that always hangs the larger root under the smaller, so each root is
+    its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: r for x in list(parent) if (r := find(x)) != x}
+
+
 def connected_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 50
 ) -> DataFrame:
-    """Connected components over a near-dup pair graph: iterative
-    min-label propagation until fixpoint.  Returns (node, component)
-    where component is the minimum node id reachable from ``node``.
+    """Connected components over a near-dup pair graph.  Returns (node,
+    component) where component is the minimum node id reachable from
+    ``node``.
 
     This is the step every production dedup pipeline needs after
     candidate pairs: near-duplication is transitive in intent (A~B, B~C
     -> one cluster) but pairwise in measurement, so keep-one-per-cluster
-    requires the transitive closure.  Each round is one join + one
-    min-aggregate (two key shuffles); a label moves one hop per round,
-    so rounds = graph diameter + 1 (the last one confirms the fixpoint),
-    and near-dup graphs are shallow (clusters are cliques-ish), so a few
-    rounds typically converge.  Each round's labels are materialized
-    with ``localCheckpoint`` — iterative DataFrames MUST truncate
-    lineage, since the label plan references itself and doubles per
-    round (exponential analysis cost by ~iteration 20 otherwise); the
-    checkpoint makes every round's plan O(1).
+    requires the transitive closure.
 
-    Convergence is observed, not probed: each node's previous label rides
-    the union + ``min`` aggregate, and ``df.observe`` counts the lowered
-    labels inside the round's own checkpoint job, so a round is ONE Spark
-    action and the driver reads one number back.  The count is safe under
-    task retries: a recomputed task re-derives the same labels and can
-    only recount lowered ones, so a zero means no label moved and a
-    positive count stays positive.  The loop stops at the first round
-    that lowers no label; if ``max_iter`` rounds all lowered some label,
-    the labels are not a fixpoint and a ``RuntimeError`` is raised
-    instead of returning them.  Large-star/small-star (Kiveris et al.,
+    One algorithm, contract on the executors and finish on the driver.
+    ``labels`` maps each node to a label, and the quotient graph is the
+    set of ``(label(src), label(dst))`` edges whose labels differ; at the
+    start every node is its own label and the quotient is the input
+    pairs.  Each iteration first collects at most
+    ``CC_DRIVER_BOUND + 1`` quotient edges (one ``TakeOrderedAndProject``
+    job).  If they fit, a min-root union-find over the labels runs on the
+    driver and one join applies its label map, so a graph of up to
+    ``CC_DRIVER_BOUND`` edges takes no Spark round.  Otherwise one
+    min-label round runs on the executors — one join + one min-aggregate,
+    a label moves one hop — and the quotient is re-derived from the new
+    labels.  Each round's labels are materialized with
+    ``localCheckpoint``: iterative DataFrames MUST truncate lineage, since
+    the label plan references itself and doubles per round.  If the
+    quotient still does not fit after ``max_iter`` rounds a
+    ``RuntimeError`` is raised.  Large-star/small-star (Kiveris et al.,
     SoCC 2014) bounds rounds by O(log n) on the same skeleton.
+
+    Construction runs two jobs on a graph that fits: the edge checkpoint
+    (the input is read once, however costly its plan) and the bounded
+    collect.  The result is lazy: the distinct nodes joined with a
+    driver-built ``LocalTableScan`` label map.
     """
-    sym = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-    sym = sym.localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint()
+    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).localCheckpoint()
+    sym = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
+        "component", F.col("node")
     )
-    for _ in range(max_iter):
-        neigh = sym.join(labels, sym.src == labels.node).select(
-            F.col("dst").alias("node"), "component", F.lit(None).alias("_old")
+    quotient = edges
+    for rnd in range(max_iter + 1):
+        cut = (
+            quotient.filter(F.col("src") != F.col("dst"))
+            .orderBy("src", "dst")
+            .limit(CC_DRIVER_BOUND + 1)
+            .collect()
         )
-        lowered = Observation()
+        if len(cut) <= CC_DRIVER_BOUND:
+            roots = _min_root_union_find(cut)
+            if not roots:
+                return labels
+            dtype = labels.schema["component"].dataType
+            root_map = pairs.sparkSession.createDataFrame(
+                pd.DataFrame({"_label": list(roots), "_root": list(roots.values())}),
+                StructType([StructField("_label", dtype), StructField("_root", dtype)]),
+            )
+            return labels.join(
+                root_map, labels["component"] == root_map["_label"], "left"
+            ).select("node", F.coalesce("_root", "component").alias("component"))
+        if rnd == max_iter:
+            break
+        neigh = sym.join(labels, sym.src == labels.node).select(
+            F.col("dst").alias("node"), "component"
+        )
         labels = (
-            labels.withColumn("_old", F.col("component"))
-            .unionByName(neigh)
+            labels.unionByName(neigh)
             .groupBy("node")
-            .agg(F.min("component").alias("component"), F.min("_old").alias("_old"))
-            .observe(lowered, F.count_if(F.col("component") < F.col("_old")).alias("n"))
-            .select("node", "component")
+            .agg(F.min("component").alias("component"))
             .localCheckpoint()
         )
-        if lowered.get["n"] == 0:
-            return labels
+        ls = labels.select(F.col("node").alias("src"), F.col("component").alias("ls"))
+        ld = labels.select(F.col("node").alias("dst"), F.col("component").alias("ld"))
+        quotient = (
+            edges.join(ls, "src")
+            .join(ld, "dst")
+            .select(F.col("ls").alias("src"), F.col("ld").alias("dst"))
+            .distinct()
+        )
     raise RuntimeError(
-        f"connected_components: labels still changing after max_iter={max_iter} "
-        "rounds; the pair graph's diameter exceeds it"
+        f"connected_components: quotient graph still above {CC_DRIVER_BOUND} "
+        f"edges after max_iter={max_iter} rounds; the pair graph's diameter "
+        "exceeds it"
     )
 
 
@@ -1204,8 +1260,8 @@ def oph_minhash_lsh_dedup(
     same one-sided semantics: no false positives ever; misses only if
     every band disagrees."""
     sigs = oph_signatures(df, id_col, text_col, num_buckets, shingle_k)
-    cands, cand_docs = _banded_candidates(df, sigs, id_col, bands, num_buckets // bands)
-    return jaccard_verify(cands, cand_docs, id_col, text_col, shingle_k, threshold)
+    cands = _banded_candidates(sigs, id_col, bands, num_buckets // bands)
+    return jaccard_verify(cands, df, id_col, text_col, shingle_k, threshold)
 
 
 def minhash_lsh_dedup_incremental(
@@ -1268,8 +1324,9 @@ def minhash_lsh_dedup_incremental(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    cand_docs = _candidate_docs(new_df.unionByName(corpus_df), cands, id_col)
-    return jaccard_verify(cands, cand_docs, id_col, text_col, shingle_k, threshold)
+    return jaccard_verify(
+        cands, new_df.unionByName(corpus_df), id_col, text_col, shingle_k, threshold
+    )
 
 
 def span_gram_positions(

@@ -6,10 +6,25 @@ bytes.  Operators like MinHash signatures break that assumption: a few MB
 of text explodes into millions of hash evaluations, so a small input scan
 lands in one task and serializes the whole stage on one core.
 
-``scale_out`` repartitions only when the input has fewer partitions than
-the session's default parallelism — a cheap shuffle of the small input at
-fixture scale, and a guaranteed no-op at 100 TB where any real corpus
-scan already has far more partitions than cores.
+Counting splits does not find that case.  A scan gets
+``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes, bytes /
+cores))``, so an 820 KB Parquet file at 4 cores and a 256 KB open cost
+is read as 4 byte-range splits — but a Parquet row group is read by the
+one split that holds its midpoint, so a one-row-group file puts every
+row in one of the 4 tasks (``[0, 6000, 0, 0]``).  The partition count
+looked wide enough and the stage ran on one core.  Asking for the count
+(``df.rdd.getNumPartitions()``) also plans the input physically, which
+runs the AQE stages of any exchange in it as construction-time jobs
+that the real action then computes again.
+
+``scale_out`` therefore decides from the optimizer's byte estimate and
+never touches ``df.rdd``: an input estimated below ``defaultParallelism
+x maxPartitionBytes`` cannot have filled a split per core, so it is
+round-robin repartitioned to ``defaultParallelism`` — a cheap shuffle of
+a small input.  A larger estimate (or an unknown one, which the
+optimizer reports as ``Long.MaxValue``) returns ``df`` unchanged, so a
+100 TB corpus scan, which already has far more splits than cores, is
+never reshuffled.  Outputs do not depend on the split.
 """
 
 from __future__ import annotations
@@ -24,14 +39,18 @@ from end_to_end_data_engineering_project_with_databricks_spark.functions.numeric
 )
 
 
-def scale_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Ensure ``df`` has at least ``min_partitions`` (default: the
-    session's ``defaultParallelism``) partitions before a compute-heavy
-    narrow stage.  No-op when already wide enough."""
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+def scale_out(df: DataFrame) -> DataFrame:
+    """Spread ``df`` over ``defaultParallelism`` partitions before a
+    compute-heavy narrow stage when its estimated size is below
+    ``defaultParallelism x spark.sql.files.maxPartitionBytes``; otherwise
+    return ``df`` itself.  Plans only — runs no Spark job."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= cores * split_bytes:
         return df
-    return df.repartition(target)
+    return df.repartition(cores)
 
 
 def salted_join(

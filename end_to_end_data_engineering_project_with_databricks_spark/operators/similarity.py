@@ -492,7 +492,11 @@ def kmeans_centroids(
     (`ivf_assign`) streams the full corpus exactly once.  Seeded k-means||
     keeps the codebook reproducible for the rows-only driver gate.
     Returns (cell_id, centroid: array<double>) — drop-in for
-    :func:`deterministic_centroids` via ``ivf_topk(centroids=...)``."""
+    :func:`deterministic_centroids` via ``ivf_topk(centroids=...)``.
+    The codebook frame is built from pandas, so it plans as a
+    ``LocalTableScan`` that every read serves from the driver, not as a
+    ``Scan ExistingRDD`` that runs Python-worker tasks per read."""
+    import pandas as pd
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -503,11 +507,9 @@ def kmeans_centroids(
         .select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
     )
     model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(sample)
-    spark = corpus.sparkSession
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return spark.createDataFrame(centers, "cell_id INT, centroid ARRAY<DOUBLE>")
+    cents = [[float(x) for x in c] for c in model.clusterCenters()]
+    centers = pd.DataFrame({"cell_id": range(len(cents)), "centroid": cents})
+    return corpus.sparkSession.createDataFrame(centers, "cell_id INT, centroid ARRAY<DOUBLE>")
 
 
 def lloyd_kmeans_fixed(
@@ -552,8 +554,11 @@ def lloyd_kmeans_fixed(
     cell sum) leaves int64 — a sufficient bound, so it may also reject
     inputs near the limit that the Spark loop survived.
     Returns (cell_id, centroid: array<double>) — drop-in for
-    :func:`deterministic_centroids` via ``ivf_topk(centroids=...)``."""
+    :func:`deterministic_centroids` via ``ivf_topk(centroids=...)``,
+    built from pandas so it plans as a ``LocalTableScan`` (no
+    Python-worker tasks per read, unlike a frame built from a list)."""
     import numpy as np
+    import pandas as pd
 
     fx_expr = F.transform(
         F.col(vec_col).cast("array<double>"),
@@ -588,7 +593,10 @@ def lloyd_kmeans_fixed(
         np.add.at(sums, near, fx)
         hit = cnt > 0
         cents[hit] = np.floor(sums[hit].astype(np.float64) / cnt[hit, None]).astype(np.int64)
-    centers = [(int(r[id_col]), (c / float(scale)).tolist()) for r, c in zip(seeds, cents)]
+    centers = pd.DataFrame({
+        "cell_id": [int(r[id_col]) for r in seeds],
+        "centroid": [(c / float(scale)).tolist() for c in cents],
+    })
     return corpus.sparkSession.createDataFrame(centers, "cell_id BIGINT, centroid ARRAY<DOUBLE>")
 
 

@@ -698,15 +698,14 @@ _COMPONENTS_CTES = f"""{_exact_jaccard_ctes(0.02, "doc_id < 1000")},
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive-closure dedup clustering: exact 3-shingle Jaccard pairs
-    (>= 0.02, doc_id < 1000) as the edge set, then iterative min-label
-    propagation (operators/dedup.connected_components) to the fixpoint —
-    the step that turns pairwise near-dup measurements into
-    keep-one-per-cluster groups (A~B, B~C -> one cluster even when A~C
-    was never measured).  The Spark side is a driver-bounded loop of
-    join + min-aggregate rounds (graph diameter + 1 of them), one Spark
-    action each: the round's checkpoint job also counts the lowered
-    labels, and the loop stops at the first round that lowers none (it
-    raises if ``max_iter`` runs out first).  The oracle is DuckDB's
+    (>= 0.02, doc_id < 1000) as the edge set, then connected components
+    (operators/dedup.connected_components) — the step that turns pairwise
+    near-dup measurements into keep-one-per-cluster groups (A~B, B~C ->
+    one cluster even when A~C was never measured).  On the Spark side a
+    quotient graph within ``CC_DRIVER_BOUND`` edges (every fixture tier)
+    is solved by a min-root union-find on the driver after one bounded
+    collect; a larger one first runs join + min-aggregate label rounds
+    until it fits.  The oracle is DuckDB's
     recursive CTE computing the same closure — the one query pairing an
     iterative DataFrame algorithm with a recursive SQL oracle."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)

@@ -1032,8 +1032,8 @@ def graph_pagerank_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed as DataFrame ops so Catalyst handles partitioning; both
     shuffles key on node ids, so co-partitioning carries across
     iterations.  The unrolled 3-step plan is oracle-checkable SQL; the
-    open-iteration variant with lineage truncation is
-    dedup_connected_components' localCheckpoint loop.
+    open-iteration variant with lineage truncation is the round loop of
+    operators/dedup.connected_components.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 300)
     items = li.select(

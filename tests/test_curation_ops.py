@@ -70,6 +70,31 @@ def test_repetition_stats_flags_degenerate_doc(spark):
     assert rows[2].dup_frac == 0.0
 
 
+def test_repetition_stats_short_and_null_docs_match_oracle(spark):
+    """A 1-token, an empty and a NULL text have no bigram: the DuckDB
+    oracle of ``text_repetition_filter`` emits no row for them, and the
+    operator must not fail the job on them (``sequence(1, 0)`` is
+    ``[1, 0]`` in Spark, and ``element_at(toks, 0)`` raises)."""
+    import duckdb
+
+    from end_to_end_data_engineering_project_with_databricks_spark.queries.registry import (
+        oracle_sql_map,
+    )
+    from tests.oracle import compare
+
+    rows = [(1, "lonely"), (2, ""), (3, None), (4, "a b a b")]
+    df = _docs(spark, rows)
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        got = repetition_stats(df, "doc_id", "text", n=2)
+        assert compare(got, con, oracle_sql_map()["text_repetition_filter"]) == []
+    finally:
+        con.close()
+    assert [r.doc_id for r in got.collect()] == [4]
+
+
 def test_pii_redact_and_counts(spark):
     df = spark.createDataFrame(
         [

@@ -14,6 +14,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from end_to_end_data_engineering_project_with_databricks_spark.operators import dedup as dedup_ops
 from end_to_end_data_engineering_project_with_databricks_spark.operators.dedup import (
     connected_components,
     exact_dedup,
@@ -460,8 +461,8 @@ def _edges(spark, pairs):
 
 
 def _components(spark, pairs, **kw):
-    """connected_components collected under a deadline, so an observed
-    count that never arrives fails the test instead of hanging the suite."""
+    """connected_components collected under a deadline, so a loop that
+    never finishes fails the test instead of hanging the suite."""
     import threading
 
     out = []
@@ -478,12 +479,12 @@ def _components(spark, pairs, **kw):
 
 
 def test_connected_components_runs_one_action_per_round(spark):
-    """A 5-node path converges in diameter + 1 = 5 rounds.  Each round is
-    one Spark action — its checkpoint, which also counts the lowered
-    labels — on top of the two setup checkpoints.  AQE submits every
-    query stage of an action as its own job, so the budget counts the
-    SQL executions (actions) the group's jobs belong to; a separate
-    convergence probe would double the per-round count."""
+    """The budget of the former round-only loop on a 5-node path —
+    diameter + 1 = 5 round actions plus two setup checkpoints — still
+    holds; with the driver finish the path takes no round at all (the
+    edge checkpoint and the bounded collect).  AQE submits every query
+    stage of an action as its own job, so the budget counts the SQL
+    executions (actions) the group's jobs belong to."""
     edges = _edges(spark, [(i, i + 1) for i in range(4)])
     sc = spark.sparkContext
     group = "connected-components-job-budget"
@@ -515,13 +516,75 @@ def test_connected_components_self_loops_and_duplicate_edges(spark):
     assert _components(spark, pairs) == {1: 1, 2: 1, 3: 3, 5: 5, 6: 5}
 
 
-def test_connected_components_raises_when_max_iter_runs_out(spark):
-    """Labels still moving after max_iter rounds are not a fixpoint: the
-    5-node path needs 5 rounds, so 5 converge and 4 raise."""
+def test_connected_components_raises_when_max_iter_runs_out(spark, monkeypatch):
+    """With the driver bound forced to 0 only an empty quotient finishes:
+    the 5-node path's quotient empties after 4 min-label rounds, so 4
+    converge and 3 raise."""
+    monkeypatch.setattr(dedup_ops, "CC_DRIVER_BOUND", 0)
     path = [(i + 1, i) for i in range(4)]
-    assert _components(spark, path, max_iter=5) == {i: 0 for i in range(5)}
-    with pytest.raises(RuntimeError, match="max_iter=4"):
-        connected_components(_edges(spark, path), max_iter=4)
+    assert _components(spark, path, max_iter=4) == {i: 0 for i in range(5)}
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(_edges(spark, path), max_iter=3)
+
+
+#: Hand graphs with the labels the round-only implementation returned.
+_CC_GRAPHS = {
+    "path": ([(i, i + 1) for i in range(5)], {i: 0 for i in range(6)}),
+    "star": ([(4, 9), (4, 2), (7, 4), (4, 6)], {2: 2, 4: 2, 6: 2, 7: 2, 9: 2}),
+    "two_components": (
+        [(1, 2), (2, 3), (10, 11), (12, 11)],
+        {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10},
+    ),
+    "duplicate_edges": ([(1, 2), (1, 2), (2, 1), (3, 2), (3, 2)], {1: 1, 2: 1, 3: 1}),
+    "self_loops": ([(3, 3), (1, 2), (6, 6), (6, 5)], {1: 1, 2: 1, 3: 3, 5: 5, 6: 5}),
+    "empty": ([], {}),
+}
+
+
+def _min_reachable(pairs):
+    """Pure-Python reference: each node's smallest reachable node id."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        seen, todo = {start}, [start]
+        while todo:
+            for n in adj[todo.pop()] - seen:
+                seen.add(n)
+                todo.append(n)
+        out[start] = min(seen)
+    return out
+
+
+@pytest.mark.parametrize("bound", ["default", 0])
+@pytest.mark.parametrize("graph", list(_CC_GRAPHS))
+def test_connected_components_hand_graphs(spark, monkeypatch, graph, bound):
+    """The driver finish (default bound: zero rounds) and the round path
+    (bound 0: rounds until the quotient is empty) both give the
+    reference labels and the labels of the round-only implementation."""
+    if bound != "default":
+        monkeypatch.setattr(dedup_ops, "CC_DRIVER_BOUND", bound)
+    pairs, today = _CC_GRAPHS[graph]
+    assert _components(spark, pairs) == _min_reachable(pairs) == today
+
+
+def test_connected_components_small_graph_takes_no_round(spark):
+    """A graph whose quotient fits the bound builds with two jobs: the
+    edge checkpoint and the bounded collect; the result is lazy."""
+    edges = _edges(spark, [(i, i + 1) for i in range(9)] + [(20, 21)])
+    sc = spark.sparkContext
+    group = "connected-components-driver-finish"
+    sc.setJobGroup(group, "connected_components")
+    try:
+        labels = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert "LocalTableScan" in labels._jdf.queryExecution().executedPlan().toString()
+    assert dict(labels.collect()) == {**{i: 0 for i in range(10)}, 20: 20, 21: 20}
 
 
 # ---------------------------------------------------------------------------

@@ -96,7 +96,7 @@ def test_incremental_lsh_pair_set_vs_exact_jaccard(spark, sf_dir: str) -> None:
 
     from end_to_end_data_engineering_project_with_databricks_spark.operators.dedup import (
         minhash_lsh_dedup_incremental,
-        shingles,
+        ngram_jaccard_pairs,
     )
     from end_to_end_data_engineering_project_with_databricks_spark.sources.readers import (
         load_table,
@@ -112,22 +112,8 @@ def test_incremental_lsh_pair_set_vs_exact_jaccard(spark, sf_dir: str) -> None:
         ).collect()
     }
 
-    sh = d.select("doc_id", SF.explode(shingles("text", 3)).alias("s"))
-    counts = sh.groupBy("doc_id").agg(SF.count("*").alias("n"))
-    exact = (
-        sh.alias("a")
-        .join(sh.alias("b"), "s")
-        .filter(SF.col("a.doc_id") < SF.col("b.doc_id"))
-        .groupBy(SF.col("a.doc_id").alias("id_a"), SF.col("b.doc_id").alias("id_b"))
-        .agg(SF.count("*").alias("inter"))
-        .join(counts.withColumnsRenamed({"doc_id": "id_a", "n": "na"}), "id_a")
-        .join(counts.withColumnsRenamed({"doc_id": "id_b", "n": "nb"}), "id_b")
-        .filter(
-            SF.col("inter").cast("double")
-            / (SF.col("na") + SF.col("nb") - SF.col("inter"))
-            >= 0.5
-        )
-        .filter((SF.col("id_a") % 10 == 0) | (SF.col("id_b") % 10 == 0))
+    exact = ngram_jaccard_pairs(d, "doc_id", "text", 3, 0.5).filter(
+        (SF.col("id_a") % 10 == 0) | (SF.col("id_b") % 10 == 0)
     )
     exact_pairs = {(r.id_a, r.id_b) for r in exact.select("id_a", "id_b").collect()}
     assert lsh_pairs == exact_pairs, (
